@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.engine.Graft
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
@@ -271,13 +273,16 @@ object Bench {
     kids.foreach(dumpPlanMetrics(_, sb, depth + 1))
   }
 
+  /** This run's local thread count: SPARK_GRAFT_CPUS, default 4. */
+  private def threads: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** Prior-round per-query baseline from the committed bench_last.json
     * (short query id -> seconds), or empty when absent/unreadable/ran at
     * a different primary SF. Read BEFORE this run overwrites the file.
     * Jackson ships with Spark, so no new dependency.
     */
   private def priorTimes(path: String, sfDir: String): Map[String, Double] =
-    priorTimesAt(path, sfDir, identity)
+    priorTimesAt(path, sfDir, threads, identity)
 
   /** Prior-round per-query baseline for the SECONDARY (sf2) leg, read
     * from the committed file's nested `sf2_detail` object — the sf0.01
@@ -286,7 +291,7 @@ object Bench {
     * confirm-before-emit screen as the primary.
     */
   private def priorTimesSf2(path: String, sf2Dir: String): Map[String, Double] =
-    priorTimesAt(path, sf2Dir, _.path("sf2_detail"))
+    priorTimesAt(path, sf2Dir, threads, _.path("sf2_detail"))
 
   /** Prior-round per-query baseline for the scale-UP leg, from the
     * committed file's nested `sf_up_detail` object. The up-leg previously
@@ -295,19 +300,28 @@ object Bench {
     * posture the up-leg is the bench that matters most.
     */
   private def priorTimesUp(path: String, upDir: String): Map[String, Double] =
-    priorTimesAt(path, upDir, _.path("sf_up_detail"))
+    priorTimesAt(path, upDir, threads, _.path("sf_up_detail"))
 
-  private def priorTimesAt(
+  /** The per-query times under `node` of the artifact at `path`, or empty
+    * when that leg ran at another SF dir or the artifact's `calib.nt`
+    * differs from this run's thread count `nt`: per-gate times do not
+    * carry across core counts, so such a prior is no baseline (r17's
+    * ns103 false positive came from a prior at another core count).
+    */
+  private[graft] def priorTimesAt(
       path: String,
       sfDir: String,
+      nt: Int,
       node: com.fasterxml.jackson.databind.JsonNode => com.fasterxml.jackson.databind.JsonNode)
       : Map[String, Double] =
     try {
       val f = new java.io.File(path)
       if (!f.isFile) Map.empty
       else {
-        val root = node(new com.fasterxml.jackson.databind.ObjectMapper().readTree(f))
-        if (root.path("sf").asText("") != sfDir) Map.empty
+        val doc = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+        val root = node(doc)
+        if (root.path("sf").asText("") != sfDir ||
+          doc.path("calib").path("nt").asInt(-1) != nt) Map.empty
         else {
           val it = root.path("queries").fields()
           val b = Map.newBuilder[String, Double]
@@ -317,7 +331,7 @@ object Bench {
           b.result()
         }
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
 
   /** Deterministic xorshift64 spin — fixed CPU-bound work with a data
     * dependence per iteration, so the JIT can neither vectorize it away
@@ -383,23 +397,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // INT96 (Spark's legacy default) carries no parquet footer statistics
-      // and so defeats timestamp zone maps (sinks.DataSkipping); write the
-      // modern stats-bearing micros type, as Iceberg mandates.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = threads
+    val spark = Graft.session(s"local[$cpus]", cpus)
     // Silence WindowExec's "No Partition Defined" warning: every
     // unpartitioned window any gate plans is ADJUDICATED — PlanSpec's
     // "adjudicated bounded set" sweep classifies each one
@@ -444,8 +443,7 @@ object Bench {
       .filter(_ >= 1).getOrElse(3)
     // Contention probe AROUND the suites (r16 brief #1): nominal is
     // nt ~= 1t; a stretched nt leg marks the window as poisoned.
-    val calibThreads = cpus.toIntOption.getOrElse(4)
-    val (calibPre1, calibPreN) = calibrate(calibThreads)
+    val (calibPre1, calibPreN) = calibrate(cpus)
     val raw1 = runSuite(spark, sfDir, selected, repeats)
     val results = raw1.collect { case (n, Some(t)) => n -> t }
     // Secondary (smaller) SF pass for the scaling check.
@@ -826,7 +824,7 @@ object Bench {
     // pattern was sustained load through the whole 32-core leg); pre+post
     // brackets the suites so "clean at the start, loaded at the end" is
     // visible too.
-    val (calibPost1, calibPostN) = calibrate(calibThreads)
+    val (calibPost1, calibPostN) = calibrate(cpus)
     val failed = failedOf(raw1, raw2.getOrElse(Seq.empty), rawUp.getOrElse(Seq.empty))
     val failedPart =
       if (failed.isEmpty) ""
@@ -841,7 +839,7 @@ object Bench {
     val stdoutQueries = results.sortBy(-_._2).take(40).sortBy(_._1)
     // ~110 bytes: well inside the driver's bounded stdout-tail capture.
     val calibPart =
-      s""","calib":{"nt":$calibThreads,"pre_1t":${ms(calibPre1)},"pre_nt":${ms(calibPreN)},"post_1t":${ms(calibPost1)},"post_nt":${ms(calibPostN)}}"""
+      s""","calib":{"nt":$cpus,"pre_1t":${ms(calibPre1)},"pre_nt":${ms(calibPreN)},"post_1t":${ms(calibPost1)},"post_nt":${ms(calibPostN)}}"""
     val line =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries_n":${results.size},"queries":${qmap(stdoutQueries)},"queries_note":"top40 by time; full map in bench_last.json","sf":"$sfDir"$scalePart$upPart$regPart$failedPart$calibPart}"""
     val fullLine =

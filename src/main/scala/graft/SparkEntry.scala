@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-import graft.engine.Engine
+import graft.engine.{Engine, Graft}
 import graft.ops.{AsofJoin, Association, Dedup, Encode, Eval, Experiment, Funnel, Graph, Importance, Incremental, Layout, Linkage, Lpm, Merge, Multimodal, Packing, PQ, Profile, Quantize, Retrieval, Sampling, Similarity, Sketch, Skyline, TextOps, TimeSeries, Validate}
 import graft.pipeline.Ingest
 import graft.proto.RowCodec
@@ -2942,7 +2942,7 @@ object SparkEntry {
       // harness lexsorts both sides, and a global orderBy here would
       // exchange+sort the full normalized text for nothing — it was the
       // only non-scan stage in the plan and the up-screen's whole signal.
-      val norm = call_function("graft_normalize", col("text"))
+      val norm = Graft.kernel(s, "graft_normalize", col("text"))
       T(s, dir, "documents")
         .select(col("doc_id"), norm.as("norm_text"), length(norm).cast("long").as("norm_len"))
     },
@@ -3324,7 +3324,7 @@ object SparkEntry {
            |  CASE WHEN len(sh) = 0 THEN 0.0
            |       ELSE (len(sh) - len(list_distinct(sh)))::DOUBLE / len(sh)::DOUBLE END AS rep_ratio
            |FROM s ORDER BY doc_id""".stripMargin)) { (s, dir) =>
-      val sh = call_function("graft_shingles", col("text"), lit(3))
+      val sh = Graft.kernel(s, "graft_shingles", col("text"), lit(3))
       T(s, dir, "documents")
         .select(
           col("doc_id"),
@@ -6646,9 +6646,9 @@ object SparkEntry {
         .select(col("doc_id"), dec.as("_dec"))
         .select(
           col("doc_id"),
-          call_function("graft_nfc", col("_dec")).as("norm"),
+          Graft.kernel(s, "graft_nfc", col("_dec")).as("norm"),
           length(col("_dec")).cast("long").as("len_dec"),
-          length(call_function("graft_nfc", col("_dec"))).cast("long").as("len_nfc"))
+          length(Graft.kernel(s, "graft_nfc", col("_dec"))).cast("long").as("len_nfc"))
         .orderBy("doc_id")
     },
     // NS-A15: frequent item triples — the k=3 Apriori level with both
@@ -6762,7 +6762,7 @@ object SparkEntry {
       T(s, dir, "lineitem")
         .select(col("l_returnflag"), cents(col("l_extendedprice")).as("p"))
         .groupBy("l_returnflag")
-        .agg(call_function("graft_topk", col("p"), lit(5)).as("top5"))
+        .agg(Graft.kernel(s, "graft_topk", col("p"), lit(5)).as("top5"))
         .select(col("l_returnflag"), posexplode(col("top5")))
         .select(col("l_returnflag"), (col("pos") + 1).cast("long").as("rank"),
           col("col").as("price_cents"))

@@ -1,25 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.Graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Deliberately NOT setting outputTimestampType=TIMESTAMP_MICROS here
-      // (unlike Engine/Bench): the driver's pandas comparator reads INT96
-      // result columns as tz-naive datetimes — matching the DuckDB oracle —
-      // while micros annotate UTC and hash-mismatch every timestamp column.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus)
+    // Deliberately INT96, NOT outputTimestampType=TIMESTAMP_MICROS, here
+    // (unlike Engine/Bench): the oracle's pandas comparator reads INT96
+    // result columns as tz-naive datetimes — matching the DuckDB oracle —
+    // while micros annotate UTC and hash-mismatch every timestamp column.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     // Known-benign warning noise (every unpartitioned window is pinned
     // by PlanSpec's adjudicated-bounded-set sweep) — keep the driver's
     // bounded output capture for signal. See Bench.main.
@@ -33,13 +27,15 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean =
       filter.forall(_.contains(name.split("_")(0)))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = SparkEntry.queries.filter(kv => selected(kv._1)).flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
-    }
+    }.toSeq.sorted
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -57,5 +53,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} gate(s) failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

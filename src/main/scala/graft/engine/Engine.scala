@@ -1,11 +1,15 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.GraftExtensions
 
-/** Session factory with scale-aware defaults.
+
+/** Session factory with scale-aware defaults — the one session profile
+  * every entry point (Bench, Verify, the tools, the specs) builds through.
   *
   * ≈ the reference's engine-open path (`NewDuckDB`, duck.go:79-124): open the
   * engine against an optional storage path. Here the storage path is the Spark
@@ -15,7 +19,10 @@ import org.apache.spark.sql.types.StructType
   * Defaults are tuned for the local[32] test harness but expressed the way a
   * cluster deployment would set them: AQE on (runtime re-planning, skew-join
   * handling, partition coalescing), shuffle partitions sized to the
-  * parallelism actually available rather than the 200 default.
+  * parallelism actually available rather than the 200 default. A `-Dspark.*`
+  * JVM property overrides the matching default, so a config sweep
+  * (`JAVA_TOOL_OPTIONS=-Dspark.sql.adaptive.enabled=false`) reaches every
+  * entry point.
   */
 object Graft {
   def session(
@@ -23,28 +30,57 @@ object Graft {
       shufflePartitions: Int = 32,
       warehouse: Option[String] = None,
       appName: String = "graft"): SparkSession = {
-    val b = SparkSession
-      .builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val defaults = Seq(
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
       // events.ts-style TIMESTAMP(NANOS) parquet columns decode as raw
       // nanos BIGINT; a session-build setting, never mutated per-read.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // INT96 (Spark's legacy default) carries no parquet footer statistics
       // and so defeats timestamp zone maps (sinks.DataSkipping); write the
       // modern stats-bearing micros type, as Iceberg mandates.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "spark.ui.enabled" -> "false")
+    val b = SparkSession.builder().master(master).appName(appName)
+    defaults.foreach { case (k, v) => b.config(k, sys.props.getOrElse(k, v)) }
     warehouse.foreach(w => b.config("spark.sql.warehouse.dir", w))
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Installs Graft's functions, optimizer rules and planner strategy
+    * ([[GraftExtensions]]'s table) on an existing session, so
+    * `spark.sql.extensions` is optional. Idempotent: whatever the session
+    * already has — from the extension or from an earlier call — is left
+    * alone (the check-before-prepend of Pathling's `SqlStrategy.setup`).
+    */
+  def install(spark: SparkSession): Unit = spark.synchronized {
+    val state = spark.sessionState
+    val registry = state.functionRegistry
+    GraftExtensions.functions.foreach { case (id, info, builder) =>
+      if (registry.lookupFunctionBuilder(id).isEmpty) registry.registerFunction(id, info, builder)
+    }
+    val x = spark.experimental
+    val rules = state.optimizer.extendedOperatorOptimizationRules ++ x.extraOptimizations
+    val newRules = GraftExtensions.optimizerRules
+      .filterNot(r => rules.exists(_.getClass == r.getClass))
+    if (newRules.nonEmpty) x.extraOptimizations = x.extraOptimizations ++ newRules
+    val strategies = state.planner.extraPlanningStrategies ++ x.extraStrategies
+    val newStrategies = GraftExtensions.strategies.filterNot(strategies.contains)
+    if (newStrategies.nonEmpty) x.extraStrategies = newStrategies ++ x.extraStrategies
+  }
+
+  /** A call to the Graft kernel `name`, installed on `spark` first: the one
+    * way code reaches a kernel.
+    */
+  def kernel(spark: SparkSession, name: String, args: Column*): Column = {
+    install(spark)
+    call_function(name, args: _*)
   }
 }
 

@@ -5,7 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd cosine similarity over two `array<float>` embedding
@@ -86,113 +89,64 @@ case class CosineSimilarityF32(left: Expression, right: Expression)
 /** Session-extension entry point (`spark.sql.extensions=graft.functions.
   * GraftExtensions` or `builder.withExtensions`): registers the native
   * functions into the Catalyst function registry so SQL and
-  * `call_function` reach them.
+  * `call_function` reach them. [[graft.engine.Graft.install]] installs the
+  * same table on an existing session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => new graft.plans.TopKRewrite)
-    ext.injectOptimizerRule(_ => new graft.plans.ApproxDistinctRewrite)
-    // the whole-operator extension tier: custom logical node → custom
-    // SparkPlan (SURVEY §2 custom-op preference (c))
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarityF32].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSimilarityF32(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_rolling_fp"),
-      new ExpressionInfo(classOf[RollingFingerprintF].getName, "graft_rolling_fp"),
-      (children: Seq[Expression]) => RollingFingerprintF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_quality"),
-      new ExpressionInfo(classOf[TextQualityF].getName, "graft_quality"),
-      (children: Seq[Expression]) => TextQualityF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_langid_marker"),
-      new ExpressionInfo(classOf[LangIdMarkerF].getName, "graft_langid_marker"),
-      (children: Seq[Expression]) => LangIdMarkerF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_langid_ngram"),
-      new ExpressionInfo(classOf[LangIdNgramF].getName, "graft_langid_ngram"),
-      (children: Seq[Expression]) => LangIdNgramF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesF].getName, "graft_shingles"),
-      (children: Seq[Expression]) => ShinglesF(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimhashF].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimhashF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinhashF].getName, "graft_minhash"),
-      (children: Seq[Expression]) => MinhashF(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[FingerprintF].getName, "graft_fingerprint"),
-      (children: Seq[Expression]) => FingerprintF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "graft_topk"),
-      (children: Seq[Expression]) => TopKAgg(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_heavyhitters"),
-      new ExpressionInfo(classOf[MisraGriesAgg].getName, "graft_heavyhitters"),
-      (children: Seq[Expression]) => MisraGriesAgg(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalizeF].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalizeF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[NormalizeF].getName, "graft_normalize"),
-      (children: Seq[Expression]) => NormalizeF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_unit_normalize"),
-      new ExpressionInfo(classOf[UnitNormalizeF32].getName, "graft_unit_normalize"),
-      (children: Seq[Expression]) => UnitNormalizeF32(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductF64].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProductF64(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ewma"),
-      new ExpressionInfo(classOf[EwmaHalfF64].getName, "graft_ewma"),
-      (children: Seq[Expression]) => EwmaHalfF64(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_kmeans_assign"),
-      new ExpressionInfo(classOf[KmeansAssignI64].getName, "graft_kmeans_assign"),
-      (children: Seq[Expression]) => KmeansAssignI64(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cooc_pairs"),
-      new ExpressionInfo(classOf[CoocPairsF].getName, "graft_cooc_pairs"),
-      (children: Seq[Expression]) => CoocPairsF(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_markup_counts"),
-      new ExpressionInfo(classOf[MarkupCountsF].getName, "graft_markup_counts"),
-      (children: Seq[Expression]) => MarkupCountsF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngram_rep"),
-      new ExpressionInfo(classOf[NgramRepProfileF].getName, "graft_ngram_rep"),
-      (children: Seq[Expression]) => NgramRepProfileF(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_marker_hits"),
-      new ExpressionInfo(classOf[MarkerHitsAllF].getName, "graft_marker_hits"),
-      (children: Seq[Expression]) => MarkerHitsAllF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_script_mix"),
-      new ExpressionInfo(classOf[ScriptMixF].getName, "graft_script_mix"),
-      (children: Seq[Expression]) => ScriptMixF(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_charlm"),
-      new ExpressionInfo(classOf[CharLmF].getName, "graft_charlm"),
-      (children: Seq[Expression]) => CharLmF(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_lsh_bands"),
-      new ExpressionInfo(classOf[LshBandsF32].getName, "graft_lsh_bands"),
-      (children: Seq[Expression]) => LshBandsF32(
-        children(0), foldInt(children(1)), foldInt(children(2)), foldInt(children(3)))))
+    GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
+}
+
+/** The one table of what Graft adds to a session: 24 functions, 2
+  * optimizer rules and 1 planner strategy.
+  */
+object GraftExtensions {
+
+  type FunctionSpec = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression)
+      : FunctionSpec =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** Fresh instances of the optimizer rules (stateless; installs compare
+    * them by class).
+    */
+  def optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(new graft.plans.TopKRewrite, new graft.plans.ApproxDistinctRewrite)
+
+  // the whole-operator extension tier: custom logical node → custom
+  // SparkPlan (SURVEY §2 custom-op preference (c))
+  val strategies: Seq[SparkStrategy] = Seq(graft.plans.AsofJoinStrategy)
+
+  val functions: Seq[FunctionSpec] = Seq(
+    fn("graft_cosine", classOf[CosineSimilarityF32])(c => CosineSimilarityF32(c(0), c(1))),
+    fn("graft_rolling_fp", classOf[RollingFingerprintF])(c => RollingFingerprintF(c(0))),
+    fn("graft_quality", classOf[TextQualityF])(c => TextQualityF(c(0))),
+    fn("graft_langid_marker", classOf[LangIdMarkerF])(c => LangIdMarkerF(c(0))),
+    fn("graft_langid_ngram", classOf[LangIdNgramF])(c => LangIdNgramF(c(0))),
+    fn("graft_shingles", classOf[ShinglesF])(c => ShinglesF(c(0), c(1))),
+    fn("graft_simhash", classOf[SimhashF])(c => SimhashF(c(0))),
+    fn("graft_minhash", classOf[MinhashF])(c => MinhashF(c(0), c(1), c(2))),
+    fn("graft_fingerprint", classOf[FingerprintF])(c => FingerprintF(c(0))),
+    fn("graft_topk", classOf[TopKAgg])(c => TopKAgg(c(0), c(1))),
+    fn("graft_heavyhitters", classOf[MisraGriesAgg])(c => MisraGriesAgg(c(0), c(1))),
+    fn("graft_nfc", classOf[NfcNormalizeF])(c => NfcNormalizeF(c(0))),
+    fn("graft_normalize", classOf[NormalizeF])(c => NormalizeF(c(0))),
+    fn("graft_unit_normalize", classOf[UnitNormalizeF32])(c => UnitNormalizeF32(c(0))),
+    fn("graft_dot", classOf[DotProductF64])(c => DotProductF64(c(0), c(1))),
+    fn("graft_ewma", classOf[EwmaHalfF64])(c => EwmaHalfF64(c(0))),
+    fn("graft_kmeans_assign", classOf[KmeansAssignI64])(c => KmeansAssignI64(c(0), c(1))),
+    fn("graft_cooc_pairs", classOf[CoocPairsF])(c => CoocPairsF(c(0), c(1))),
+    fn("graft_markup_counts", classOf[MarkupCountsF])(c => MarkupCountsF(c(0))),
+    fn("graft_ngram_rep", classOf[NgramRepProfileF])(c => NgramRepProfileF(c(0), c(1))),
+    fn("graft_marker_hits", classOf[MarkerHitsAllF])(c => MarkerHitsAllF(c(0))),
+    fn("graft_script_mix", classOf[ScriptMixF])(c => ScriptMixF(c(0))),
+    fn("graft_charlm", classOf[CharLmF])(c => CharLmF(c(0), c(1), c(2))),
+    fn("graft_lsh_bands", classOf[LshBandsF32])(c => LshBandsF32(
+      c(0), foldInt(c(1)), foldInt(c(2)), foldInt(c(3)))))
 
   /** The LSH geometry arguments must be integer literals: folded once at
     * expression build so the plane matrix is a plan constant.

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** As-of joins — an operator the reference's SQL surface reaches only
   * through DuckDB's native ASOF JOIN (duck.go:195 pass-through; DuckDB
   * supports both `>=` backward and `<=` forward directions). Spark has no
@@ -190,9 +192,8 @@ object AsofJoin {
     * O(1)-state merge pass. Timestamps must be LongType (epoch micros);
     * right (key, ts) pairs should be unique (dedupe to snapshots first —
     * ties are otherwise order-ambiguous, the FeatureStore discipline).
-    * Requires the `GraftExtensions` session (the strategy is injected
-    * there); without it the plan has no physical form and planning fails
-    * fast.
+    * Installs Graft on the left side's session, whose planner then has
+    * the strategy that gives the node its physical form.
     */
   def backwardNative(
       left: DataFrame,
@@ -201,6 +202,7 @@ object AsofJoin {
       leftTs: String,
       rightTs: String): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    Graft.install(left.sparkSession)
     val lp = left.queryExecution.analyzed
     // Self-joins: the analyzer's DeduplicateRelations does not visit
     // custom nodes, so a right side sharing expression ids with the left

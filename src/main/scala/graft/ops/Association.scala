@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+import scala.util.control.NonFatal
+
 /** Market-basket association mining: which items co-occur in the same
   * basket more often than a support threshold — the "frequently bought
   * together" primitive (north-star extension; pairs are the k=2 level of
@@ -90,10 +93,10 @@ object Association {
   private def gatedBroadcast(b0: DataFrame, freqFrame: DataFrame, minSupport: Long): DataFrame = {
     val thresh =
       try b0.sparkSession.conf.get(BroadcastBoundKey, (256L << 20).toString).toLong
-      catch { case _: Throwable => 256L << 20 }
+      catch { case NonFatal(_) => 256L << 20 }
     val bound =
       try b0.queryExecution.optimizedPlan.stats.sizeInBytes / BigInt(minSupport)
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
+      catch { case NonFatal(_) => BigInt(Long.MaxValue) }
     if (thresh > 0 && bound <= BigInt(thresh)) broadcast(freqFrame) else freqFrame
   }
 
@@ -412,7 +415,7 @@ object Association {
   def cooccurrence(
       docs: DataFrame, idCol: String, textCol: String, window: Int): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    // Scan-local pair generation when GraftExtensions is installed
+    // Scan-local pair generation
     // (graft.functions.TextKernels.coocPairs): each row's pairs come
     // straight out of its own token array, so the posexplode +
     // offset-explode + (doc, position) self-join — and its shuffle of
@@ -420,18 +423,16 @@ object Association {
     // exchange left is the pair-count aggregation's map-side-combined
     // shuffle. Equivalence pinned in FunctionsSpec (incl. the UTF-8
     // binary tok_a/tok_b ordering the declarative least/greatest uses).
-    if (docs.sparkSession.catalog.functionExists("graft_cooc_pairs"))
-      docs
-        .select(explode(
-          call_function("graft_cooc_pairs", col(textCol), lit(window))).as("pr"))
-        .select(col("pr.tok_a").as("tok_a"), col("pr.tok_b").as("tok_b"))
-        .groupBy("tok_a", "tok_b")
-        .agg(count(lit(1)).as("n_cooc"))
-    else cooccurrenceDeclarative(docs, idCol, textCol, window)
+    docs
+      .select(explode(Graft.kernel(docs.sparkSession,
+        "graft_cooc_pairs", col(textCol), lit(window))).as("pr"))
+      .select(col("pr.tok_a").as("tok_a"), col("pr.tok_b").as("tok_b"))
+      .groupBy("tok_a", "tok_b")
+      .agg(count(lit(1)).as("n_cooc"))
   }
 
-  /** Declarative twin of [[cooccurrence]] (the fallback without
-    * GraftExtensions, and the equivalence oracle for the kernel).
+  /** Declarative twin of [[cooccurrence]], kept only as the kernel's
+    * equivalence oracle in specs.
     */
   private[graft] def cooccurrenceDeclarative(
       docs: DataFrame, idCol: String, textCol: String, window: Int): DataFrame = {

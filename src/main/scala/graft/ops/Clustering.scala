@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Distributed k-means over QUANTIZED INTEGER vectors (north-star
   * extension): the semantic-clustering primitive behind corpus
   * organization, cluster-then-dedup pruning, and IVF-style partitioning —
@@ -107,9 +109,8 @@ object Clustering {
     require(k > 0, "k must be positive")
     require(iterations >= 0, "negative iterations")
     // Deliberately NOT Par.spread here: the assignment argmin is the
-    // codegen'd graft_kmeans_assign kernel wherever the session
-    // extension is installed (cheap per byte), and the checkpointed
-    // layout feeds EVERY downstream consumer — the IVF/PQ ladder runs
+    // codegen'd graft_kmeans_assign kernel (cheap per byte), and the
+    // checkpointed layout feeds EVERY downstream consumer — the IVF/PQ ladder runs
     // dozens of tiny stages over these blocks, and baking a widened
     // layout into the checkpoint charged each of them the extra task
     // fan-out (measured: ns95 ivfpq 3.9 → 5.1 s isolated at sf0.1 from
@@ -157,49 +158,27 @@ object Clustering {
   }
 
   /** Scan-local assignment: the k centroids collapse to ONE broadcast row
-    * and the argmin runs per input row — via the codegen'd
-    * `graft_kmeans_assign` kernel when the session extension is installed
-    * (centroids flattened row-major; cid = row index because centroid ids
-    * are 0..k-1 by construction), or an equivalent higher-order fold
-    * otherwise. Ties break to the lowest cid in both paths (strict `<`
-    * keeps the first minimum; the array is sorted by cid).
+    * and the codegen'd `graft_kmeans_assign` kernel runs the argmin per
+    * input row (centroids flattened row-major; cid = row index because
+    * centroid ids are 0..k-1 by construction). Ties break to the lowest
+    * cid (strict `<` keeps the first minimum; the array is sorted by cid).
     */
-  private def assign(vecs: DataFrame, centroids: DataFrame): DataFrame =
-    if (vecs.sparkSession.catalog.functionExists("graft_kmeans_assign")) {
-      val packed = centroids.agg(
-        flatten(
-          transform(
-            array_sort(collect_list(struct(col("cid"), col("c")))),
-            s => s.getField("c"))).as("cs"))
-      vecs
-        .crossJoin(broadcast(packed)) // exactly one row — justified hint
-        .withColumn("best", call_function("graft_kmeans_assign", col("v"), col("cs")))
-        .select(
-          col("id"),
-          col("v"),
-          element_at(col("best"), 1).as("cluster"),
-          element_at(col("best"), 2).as("sqdist"))
-    } else {
-      val packed = centroids.agg(
-        array_sort(collect_list(struct(col("cid"), col("c")))).as("cs"))
-      vecs
-        .crossJoin(broadcast(packed)) // exactly one row — justified hint
-        .withColumn(
-          "best",
-          aggregate(
-            col("cs"),
-            struct(lit(Long.MaxValue).as("d"), lit(-1L).as("cid")),
-            (acc, s) => {
-              val d = sqDist(col("v"), s.getField("c"))
-              when(d < acc.getField("d"), struct(d.as("d"), s.getField("cid").as("cid")))
-                .otherwise(acc)
-            }))
-        .select(
-          col("id"),
-          col("v"),
-          col("best").getField("cid").as("cluster"),
-          col("best").getField("d").as("sqdist"))
-    }
+  private def assign(vecs: DataFrame, centroids: DataFrame): DataFrame = {
+    val packed = centroids.agg(
+      flatten(
+        transform(
+          array_sort(collect_list(struct(col("cid"), col("c")))),
+          s => s.getField("c"))).as("cs"))
+    vecs
+      .crossJoin(broadcast(packed)) // exactly one row — justified hint
+      .withColumn("best",
+        Graft.kernel(vecs.sparkSession, "graft_kmeans_assign", col("v"), col("cs")))
+      .select(
+        col("id"),
+        col("v"),
+        element_at(col("best"), 1).as("cluster"),
+        element_at(col("best"), 2).as("sqdist"))
+  }
 
   /** Exact squared L2 distance between two long arrays (index-order fold —
     * integer adds are associative, the order is for clarity only).

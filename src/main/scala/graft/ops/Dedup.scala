@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Deduplication operators for LLM training-data pipelines (north-star
   * extension — BASELINE.json `north_star`; absent from the reference, which
   * never inspects row content).
@@ -96,18 +98,16 @@ object Dedup {
     * [[graft.functions.TextKernels.shingles]]) and explode in the same
     * narrow stage as the scan — NO shuffle before any consumer (the
     * earlier posexplode + per-doc window-lead form paid a doc_id
-    * shuffle+sort up front; equivalence pinned in OpsSpec). Falls back to
-    * the windowed form when GraftExtensions isn't installed.
+    * shuffle+sort up front; equivalence pinned in OpsSpec).
     */
   def shingleRows(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    if (df.sparkSession.catalog.functionExists("graft_shingles"))
-      df.select(
-        col(idCol).as("doc_id"),
-        explode(call_function("graft_shingles", col(textCol), lit(n))).as("gram"))
-    else shingleRowsWindowed(df, idCol, textCol, n)
+    df.select(
+      col(idCol).as("doc_id"),
+      explode(Graft.kernel(df.sparkSession, "graft_shingles", col(textCol), lit(n))).as("gram"))
 
   /** Declarative twin of [[shingleRows]]: posexplode the tokens,
-    * window-lead the next n−1 tokens, concat (one doc_id shuffle).
+    * window-lead the next n−1 tokens, concat (one doc_id shuffle). Kept
+    * only as the kernel's equivalence oracle in specs.
     */
   private[graft] def shingleRowsWindowed(
       df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
@@ -140,16 +140,17 @@ object Dedup {
       textCol: String,
       shingleLen: Int = 3,
       k: Int = 16): DataFrame =
-    if (df.sparkSession.catalog.functionExists("graft_minhash"))
-      // One codegen'd pass per row — the sketch pays NO shuffle at all
-      // (the exploded form below shuffles one k-counter row per doc per
-      // partition; equivalence pinned in OpsSpec).
-      df.select(
-        col(idCol).as("doc_id"),
-        call_function("graft_minhash", col(textCol), lit(shingleLen), lit(k)).as("sig"))
-    else minhashSignaturesExploded(df, idCol, textCol, shingleLen, k)
+    // One codegen'd pass per row — the sketch pays NO shuffle at all
+    // (the exploded twin below shuffles one k-counter row per doc per
+    // partition; equivalence pinned in OpsSpec).
+    df.select(
+      col(idCol).as("doc_id"),
+      Graft.kernel(df.sparkSession, "graft_minhash", col(textCol), lit(shingleLen), lit(k))
+        .as("sig"))
 
-  /** Explode + k running-min aggregation twin of [[minhashSignatures]]. */
+  /** Explode + k running-min aggregation twin of [[minhashSignatures]],
+    * kept only as the kernel's equivalence oracle in specs.
+    */
   private[graft] def minhashSignaturesExploded(
       df: DataFrame,
       idCol: String,
@@ -318,15 +319,15 @@ object Dedup {
     * for the plan-shape rationale.
     */
   def simhashPerDoc(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    if (df.sparkSession.catalog.functionExists("graft_simhash"))
-      // Scan-local codegen'd sketch — no explode, no aggregation shuffle
-      // (equivalence vs the exploded form pinned in OpsSpec).
-      df.select(
-        col(idCol).as("doc_id"),
-        call_function("graft_simhash", col(textCol)).as("simhash"))
-    else simhashPerDocExploded(df, idCol, textCol)
+    // Scan-local codegen'd sketch — no explode, no aggregation shuffle
+    // (equivalence vs the exploded twin pinned in OpsSpec).
+    df.select(
+      col(idCol).as("doc_id"),
+      Graft.kernel(df.sparkSession, "graft_simhash", col(textCol)).as("simhash"))
 
-  /** Explode + 33-counter aggregation twin of [[simhashPerDoc]]. */
+  /** Explode + 33-counter aggregation twin of [[simhashPerDoc]], kept only
+    * as the kernel's equivalence oracle in specs.
+    */
   private[graft] def simhashPerDocExploded(
       df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val hashed = df
@@ -876,49 +877,18 @@ object Dedup {
       tables: Int = 8,
       planesPerTable: Int = 4): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
     require(tables * planesPerTable <= 63, "too many total planes")
     val base = df
       .select(col(idCol).cast("long").as("vid"), col(vecCol).as("vec"))
-    val kernels = spark.catalog.functionExists("graft_lsh_bands") &&
-      spark.catalog.functionExists("graft_unit_normalize")
-    // Fast path: native expressions keep both scan passes (normalize,
-    // band assignment) inside whole-stage codegen — no object
-    // serialize/deserialize boundary. Fallback: the typed-map twins with
-    // verbatim-identical arithmetic.
+    // Native expressions keep both scan passes (normalize, band
+    // assignment) inside whole-stage codegen — no object
+    // serialize/deserialize boundary.
     val nvecs =
-      if (kernels)
-        base.select(col("vid"), call_function("graft_unit_normalize", col("vec")).as("nv"))
-      else
-        base.as[(Long, Array[Float])]
-          .map { case (vid, vec) => (vid, Dedup.unitNormalize(vec)) }
-          .toDF("vid", "nv")
-    val banded =
-      if (kernels)
-        base.select(col("vid"), posexplode(call_function(
-            "graft_lsh_bands", col("vec"), lit(tables), lit(planesPerTable), lit(dims))))
-          .select(col("pos").as("t"), col("col").as("bucket"), col("vid"))
-      else {
-        val w = Array.tabulate(tables * planesPerTable, dims)(
-          (p, d) => Similarity.planeWeightJvm(p, d))
-        base.as[(Long, Array[Float])]
-          .flatMap { case (vid, vec) =>
-            (0 until tables).iterator.map { t =>
-              var bucket = 0L
-              var j = 0
-              while (j < planesPerTable) {
-                val wp = w(t * planesPerTable + j)
-                var proj = 0.0
-                var d = 0
-                while (d < dims) { proj += wp(d) * vec(d).toDouble; d += 1 }
-                if (proj >= 0) bucket |= 1L << j
-                j += 1
-              }
-              (t, bucket, vid)
-            }
-          }
-          .toDF("t", "bucket", "vid")
-      }
+      base.select(col("vid"), Graft.kernel(spark, "graft_unit_normalize", col("vec")).as("nv"))
+    val banded = base
+      .select(col("vid"), posexplode(Graft.kernel(spark,
+        "graft_lsh_bands", col("vec"), lit(tables), lit(planesPerTable), lit(dims))))
+      .select(col("pos").as("t"), col("col").as("bucket"), col("vid"))
     val a = banded.alias("a")
     val b = banded.alias("b")
     val cands = a
@@ -931,34 +901,18 @@ object Dedup {
 
   /** Exact cosine rerank of candidate pairs against the unit-normalized
     * vectors `nvecs` (vid, nv): joins each side back by id, applies the
-    * index-order dot product (codegen'd when graft extensions are loaded),
-    * keeps pairs at `cos >= minCosine`. Shared by the LSH and IVF
-    * candidate generators — vectors move only O(candidates) times.
+    * codegen'd index-order dot product, keeps pairs at
+    * `cos >= minCosine`. Shared by the LSH and IVF candidate generators —
+    * vectors move only O(candidates) times.
     */
   private def rerankPairs(
-      cands: DataFrame, nvecs: DataFrame, minCosine: Double): DataFrame = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val joined = cands
+      cands: DataFrame, nvecs: DataFrame, minCosine: Double): DataFrame =
+    cands
       .join(nvecs.toDF("vec_a", "na"), "vec_a")
       .join(nvecs.toDF("vec_b", "nb"), "vec_b")
-    val scored =
-      if (spark.catalog.functionExists("graft_dot"))
-        joined.select(col("vec_a"), col("vec_b"),
-          call_function("graft_dot", col("na"), col("nb")).as("cos"))
-      else
-        joined
-          .select(col("vec_a"), col("vec_b"), col("na"), col("nb"))
-          .as[(Long, Long, Array[Double], Array[Double])]
-          .map { case (va, vb, na, nb) =>
-            var acc = 0.0
-            var i = 0
-            while (i < na.length) { acc += na(i) * nb(i); i += 1 }
-            (va, vb, acc)
-          }
-          .toDF("vec_a", "vec_b", "cos")
-    scored.filter(col("cos") >= minCosine)
-  }
+      .select(col("vec_a"), col("vec_b"),
+        Graft.kernel(cands.sparkSession, "graft_dot", col("na"), col("nb")).as("cos"))
+      .filter(col("cos") >= minCosine)
 
   /** IVF-candidate twin of [[lshNearDupPairs]]: near-dup pairs whose two
     * vectors share an IVF cell (integer-Lloyd coarse quantizer), exact
@@ -980,8 +934,6 @@ object Dedup {
       minCosine: Double,
       nCells: Int = 64,
       seed: Long = 42L): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val index = Similarity.ivfFit(df, idCol, vecCol, nCells, seed, persist = false)
     val cells = index.corpusCells.select(col("cell"), col("nid").as("vid"))
     val a = cells.alias("a")
@@ -990,15 +942,8 @@ object Dedup {
       .join(b, col("a.cell") === col("b.cell") && col("a.vid") < col("b.vid"))
       .select(col("a.vid").as("vec_a"), col("b.vid").as("vec_b"))
       .distinct()
-    val nvecs =
-      if (spark.catalog.functionExists("graft_unit_normalize"))
-        df.select(col(idCol).cast("long").as("vid"),
-          call_function("graft_unit_normalize", col(vecCol)).as("nv"))
-      else
-        df.select(col(idCol).cast("long").as("vid"), col(vecCol).as("vec"))
-          .as[(Long, Array[Float])]
-          .map { case (vid, vec) => (vid, Dedup.unitNormalize(vec)) }
-          .toDF("vid", "nv")
+    val nvecs = df.select(col(idCol).cast("long").as("vid"),
+      Graft.kernel(df.sparkSession, "graft_unit_normalize", col(vecCol)).as("nv"))
     rerankPairs(cands, nvecs, minCosine)
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Product quantization over int8-quantized embeddings (north-star
   * extension): the MEMORY-BOUNDED ANN representation for corpora whose
   * float vectors don't fit the serving tier — each d-dim vector
@@ -90,8 +92,6 @@ object PQ {
           "id")
         .select(col("sub"), (row_number().over(w) - 1).cast("long").as("cid"),
           col("v").as("c")))
-    val useKernel =
-      quantized.sparkSession.catalog.functionExists("graft_kmeans_assign")
     var iter = 0
     while (iter < iterations) {
       // Scan-local assignment: all m·ksub centroids collapse to ONE
@@ -100,32 +100,13 @@ object PQ {
       // cid = row index because cids are 0..ksub-1 by construction) —
       // the per-sub flattened codebook is an O(1) element_at on the
       // broadcast row, so fusing subspaces does not trade codegen away.
-      val assigned =
-        if (useKernel) {
-          val perSub = books
-            .agg(array_sort(collect_list(struct(col("sub"), col("cid"), col("c"))))
-              .as("_all"))
-            .select(transform(
-              sequence(lit(0L), lit((m - 1).toLong)),
-              j => flatten(transform(
-                filter(col("_all"), b => b.getField("sub") === j),
-                b => b.getField("c")))).as("_css"))
-          subs
-            .crossJoin(broadcast(perSub)) // exactly one row — justified hint
-            .select(col("sub"), col("v"),
-              element_at(
-                call_function("graft_kmeans_assign", col("v"),
-                  element_at(col("_css"), col("sub").cast("int") + 1)),
-                1).as("cluster"))
-        } else {
-          val packed = packedBooks(books)
-          subs
-            .crossJoin(broadcast(packed)) // exactly one row — justified hint
-            .select(col("sub"), col("v"),
-              argminCode(col("v"),
-                filter(col("_books"), b => b.getField("sub") === col("sub")))
-                .as("cluster"))
-        }
+      val assigned = subs
+        .crossJoin(broadcast(perSubBooks(books, m))) // exactly one row — justified hint
+        .select(col("sub"), col("v"),
+          element_at(
+            Graft.kernel(quantized.sparkSession, "graft_kmeans_assign", col("v"),
+              element_at(col("_css"), col("sub").cast("int") + 1)),
+            1).as("cluster"))
       val dims2 = assigned
         .select(col("sub"), col("cluster"), posexplode(col("v")).as(Seq("pos", "val")))
         .groupBy("sub", "cluster", "pos")
@@ -171,44 +152,46 @@ object PQ {
     // the flattened per-subspace codebook row lists centroids in cid
     // order (array_sort by (sub, cid)), so the kernel's argmin INDEX is
     // the code, and its strict-< first-wins tie rule is argminCode's
-    // lowest-cid rule. The declarative argminCode spelling below stays as
-    // the no-extensions fallback and the equivalence oracle.
-    if (quantized.sparkSession.catalog.functionExists("graft_kmeans_assign")) {
-      val perSub = codebooks
-        .agg(array_sort(collect_list(struct(col("sub"), col("cid"), col("c"))))
-          .as("_all"))
-        .select(transform(
-          sequence(lit(0L), lit((m - 1).toLong)),
-          j => flatten(transform(
-            filter(col("_all"), b => b.getField("sub") === j),
-            b => b.getField("c")))).as("_css"))
-      // ONE long-cast pass over the vector (the cast transform is an
-      // interpreted HOF; the old spelling re-ran it once per subspace),
-      // and none at all when the column is already array<bigint> (the
-      // ivfPqTopK residual path).
-      val alreadyLong = quantized.schema(vecCol).dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, _) => true
-        case _ => false
-      }
-      val vl = if (alreadyLong) col(vecCol) else transform(col(vecCol), _.cast("long"))
-      val codes = (0 until m).map { j =>
-        element_at(
-          call_function("graft_kmeans_assign",
-            slice(col("_vl"), j * dsub + 1, dsub),
-            element_at(col("_css"), j + 1)),
-          1)
-      }
-      return quantized
-        .crossJoin(broadcast(perSub)) // exactly one row — justified hint
-        .withColumn("_vl", vl)
-        .select(col(idCol), array(codes: _*).as("codes"))
+    // lowest-cid rule ([[pqEncodeDeclarative]] is the equivalence oracle).
+    // ONE long-cast pass over the vector (the cast transform is an
+    // interpreted HOF; the old spelling re-ran it once per subspace),
+    // and none at all when the column is already array<bigint> (the
+    // ivfPqTopK residual path).
+    val alreadyLong = quantized.schema(vecCol).dataType match {
+      case org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.LongType, _) => true
+      case _ => false
     }
-    pqEncodeDeclarative(quantized, idCol, vecCol, codebooks, dims, m)
+    val vl = if (alreadyLong) col(vecCol) else transform(col(vecCol), _.cast("long"))
+    val codes = (0 until m).map { j =>
+      element_at(
+        Graft.kernel(quantized.sparkSession, "graft_kmeans_assign",
+          slice(col("_vl"), j * dsub + 1, dsub),
+          element_at(col("_css"), j + 1)),
+        1)
+    }
+    quantized
+      .crossJoin(broadcast(perSubBooks(codebooks, m))) // exactly one row — justified hint
+      .withColumn("_vl", vl)
+      .select(col(idCol), array(codes: _*).as("codes"))
   }
 
-  /** The interpreted argminCode twin of [[pqEncode]] — the no-extensions
-    * fallback and the kernel arm's equivalence oracle (OpsSpec).
+  /** The m per-subspace codebooks as ONE row `_css`: element j + 1 is
+    * subspace j's centroids flattened in cid order, the layout
+    * `graft_kmeans_assign` reads (its argmin index is then the cid).
+    */
+  private def perSubBooks(codebooks: DataFrame, m: Int): DataFrame =
+    codebooks
+      .agg(array_sort(collect_list(struct(col("sub"), col("cid"), col("c"))))
+        .as("_all"))
+      .select(transform(
+        sequence(lit(0L), lit((m - 1).toLong)),
+        j => flatten(transform(
+          filter(col("_all"), b => b.getField("sub") === j),
+          b => b.getField("c")))).as("_css"))
+
+  /** The interpreted argminCode twin of [[pqEncode]], kept only as the
+    * kernel's equivalence oracle in specs.
     */
   private[graft] def pqEncodeDeclarative(
       quantized: DataFrame,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (north-star extension — BASELINE.json `north_star`).
   *
@@ -35,16 +37,12 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
-  /** Cosine via the native codegen'd [[graft.functions.CosineSimilarityF32]]
-    * when the session has graft extensions loaded, else the declarative
-    * fold. Bit-identical results either way (same widening, same
-    * index-order accumulation) — only the per-pair interpretation cost
-    * differs.
+  /** Cosine via the native codegen'd [[graft.functions.CosineSimilarityF32]]:
+    * bit-identical to the declarative [[cosine]] fold (same widening, same
+    * index-order accumulation) without its per-pair interpretation cost.
     */
   def cosineFast(df: DataFrame, a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("graft_cosine"))
-      call_function("graft_cosine", a, b)
-    else cosine(a, b)
+    Graft.kernel(df.sparkSession, "graft_cosine", a, b)
 
   /** Routing knobs for the kNN family ([[topKRouted]],
     * [[labelDisagreement]], [[knnClassify]], [[hardNegatives]],
@@ -258,8 +256,10 @@ object Similarity {
 
   /** Bucket assignment as a tight JVM kernel over a precomputed plane
     * matrix — the scale path's map side: per-row work is planes×dims
-    * multiply-adds, no per-row hashing, no shuffle. Bit-identical to
-    * [[lshBucket]] (same weights, same index-order fold).
+    * multiply-adds, no per-row hashing, no shuffle. The codegen'd
+    * graft_lsh_bands expression with a single table of `planes` planes:
+    * bit `p` of element 1 is exactly the global-plane-index sign bit, so
+    * this is [[lshBucket]] verbatim (same weights, same index-order fold).
     * Output: (idCol, bucket).
     */
   def lshBucketsKernel(
@@ -267,38 +267,11 @@ object Similarity {
       idCol: String,
       vecCol: String,
       planes: Int,
-      dims: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // Fast path: the codegen'd graft_lsh_bands expression with a single
-    // table of `planes` planes — bit `p` of element 1 is exactly the
-    // global-plane-index sign bit, so this is [[lshBucket]] verbatim.
-    if (spark.catalog.functionExists("graft_lsh_bands"))
-      corpus.select(
-        col(idCol).cast("long").as(idCol),
-        element_at(call_function(
-          "graft_lsh_bands", col(vecCol), lit(1), lit(planes), lit(dims)), 1).as("bucket"))
-    else {
-      val w = Array.tabulate(planes, dims)((p, d) => planeWeightJvm(p, d))
-      corpus
-        .select(col(idCol).cast("long"), col(vecCol))
-        .as[(Long, Array[Float])]
-        .map { case (vid, vec) =>
-          var bucket = 0L
-          var p = 0
-          while (p < planes) {
-            var proj = 0.0
-            var d = 0
-            val wp = w(p)
-            while (d < dims) { proj += wp(d) * vec(d).toDouble; d += 1 }
-            if (proj >= 0) bucket |= 1L << p
-            p += 1
-          }
-          (vid, bucket)
-        }
-        .toDF(idCol, "bucket")
-    }
-  }
+      dims: Int): DataFrame =
+    corpus.select(
+      col(idCol).cast("long").as(idCol),
+      element_at(Graft.kernel(corpus.sparkSession,
+        "graft_lsh_bands", col(vecCol), lit(1), lit(planes), lit(dims)), 1).as("bucket"))
 
   /** IVF (inverted-file) ANN: a KMeans coarse quantizer assigns every
     * corpus vector to a cell; a query searches only the `nProbe` cells

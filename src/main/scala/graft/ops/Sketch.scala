@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Deterministic count-min sketch (north-star extension): approximate
   * frequency counting in FIXED space — the vocabulary-stats primitive for
   * corpora where the exact (token, count) table is itself huge. The
@@ -466,7 +468,7 @@ object Sketch {
       if (groupCols.isEmpty) df.groupBy()
       else df.groupBy(groupCols.map(col): _*)
     grouped
-      .agg(expr(s"graft_heavyhitters($keyCol, $capacity)").as("hh"))
+      .agg(Graft.kernel(df.sparkSession, "graft_heavyhitters", col(keyCol), lit(capacity)).as("hh"))
       .select(groupCols.map(col) :+ posexplode(col("hh")): _*)
       .select(
         groupCols.map(col) ++ Seq(

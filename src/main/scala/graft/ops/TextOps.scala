@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Text-analysis primitives for LLM training-data pipelines (north-star
   * extension beyond the reference surface — BASELINE.json `north_star`; the
   * reference itself moves opaque columns and never inspects text,
@@ -114,18 +116,13 @@ object TextOps {
     * broadcast-join form (OpsSpec). The 100 TB shape: scan-local map, no
     * explode shuffle, no aggregation state.
     */
-  def langIdMarkerFast(c: Column): Column =
-    if (org.apache.spark.sql.SparkSession.active.catalog
-        .functionExists("graft_langid_marker"))
-      call_function("graft_langid_marker", c)
-    else langId(c)
+  def langIdMarkerFast(c: Column): Column = activeKernel("graft_langid_marker", c)
 
   /** Kernel form of the char-trigram language ID over
     * [[DefaultTrigramProfiles]] — same argmax semantics as
     * [[langIdNgramTable]] without exploding one row per character position.
     */
-  def langIdNgramFast(c: Column): Column =
-    call_function("graft_langid_ngram", c)
+  def langIdNgramFast(c: Column): Column = activeKernel("graft_langid_ngram", c)
 
   /** DataFrame-level char-n-gram language ID: explode character trigram
     * positions (codegen'd substr), join a broadcast (gram → lang, rank)
@@ -196,11 +193,7 @@ object TextOps {
   /** Kernel form of [[fingerprint]] (one JVM pass; UTF-8-binary token
     * ordering matches Spark's array_sort — OpsSpec-pinned).
     */
-  def fingerprintFast(c: Column): Column =
-    if (org.apache.spark.sql.SparkSession.active.catalog
-        .functionExists("graft_fingerprint"))
-      call_function("graft_fingerprint", c)
-    else fingerprint(c)
+  def fingerprintFast(c: Column): Column = activeKernel("graft_fingerprint", c)
 
   /** Order-SENSITIVE polynomial rolling-hash fingerprint over the token
     * hash stream: h ← (h·31 + hash32(tok)) mod (2^31 − 1). Exact 64-bit
@@ -217,25 +210,28 @@ object TextOps {
 
   /** Kernel form of [[rollingFingerprint]]: one codegen'd JVM loop
     * ([[graft.functions.TextKernels]]) instead of the interpreted
-    * `aggregate(transform(...))` chain; bit-identical (OpsSpec). Falls
-    * back to the declarative form when GraftExtensions isn't installed.
+    * `aggregate(transform(...))` chain; bit-identical (OpsSpec).
     */
-  def rollingFingerprintFast(c: Column): Column =
-    if (org.apache.spark.sql.SparkSession.active.catalog
-        .functionExists("graft_rolling_fp"))
-      call_function("graft_rolling_fp", c)
-    else rollingFingerprint(c)
+  def rollingFingerprintFast(c: Column): Column = activeKernel("graft_rolling_fp", c)
 
   /** Quality features as one array [awl, stop_ratio, punct_ratio, quality]
     * — the kernel tokenizes each row ONCE (the individual Column forms
     * re-tokenize per feature). Bit-identical to the declarative forms
-    * (OpsSpec); same fallback contract as [[rollingFingerprintFast]].
+    * (OpsSpec).
     */
-  def qualityFeatures(c: Column): Column =
-    if (org.apache.spark.sql.SparkSession.active.catalog
-        .functionExists("graft_quality"))
-      call_function("graft_quality", c)
-    else array(avgWordLen(c), stopwordRatio(c), punctRatio(c), qualityScore(c))
+  def qualityFeatures(c: Column): Column = activeKernel("graft_quality", c)
+
+  /** A Column-only kernel call: with no DataFrame at hand, Graft installs
+    * on the active session.
+    */
+  private def activeKernel(name: String, args: Column*): Column =
+    Graft.kernel(org.apache.spark.sql.SparkSession.active, name, args: _*)
+
+  /** The codegen'd one-pass word n-gram kernel: [[shingles]] without the
+    * interpreted slice fold.
+    */
+  private def shingleKernel(df: DataFrame, text: Column, n: Int): Column =
+    Graft.kernel(df.sparkSession, "graft_shingles", text, lit(n))
 
   /** Kernel form of [[qualityScore]]. */
   def qualityScoreFast(c: Column): Column = qualityFeatures(c).getItem(3)
@@ -368,12 +364,9 @@ object TextOps {
       n: Int = 3,
       minOverlap: Int = 3): org.apache.spark.sql.DataFrame = {
     def distinctGrams(df: org.apache.spark.sql.DataFrame) =
-      if (df.sparkSession.catalog.functionExists("graft_shingles"))
-        df.select(
-          col(idCol).as("doc_id"),
-          explode(array_distinct(call_function("graft_shingles", col(textCol), lit(n))))
-            .as("gram"))
-      else Dedup.shingleRows(df, idCol, textCol, n).distinct()
+      df.select(
+        col(idCol).as("doc_id"),
+        explode(array_distinct(shingleKernel(df, col(textCol), n))).as("gram"))
     val benchGrams = distinctGrams(bench).select(col("gram")).distinct()
     val hits = distinctGrams(corpus)
       .join(broadcast(benchGrams), "gram")
@@ -411,11 +404,7 @@ object TextOps {
       textCol: String,
       n: Int = 3,
       minFrac: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    val spark = corpus.sparkSession
-    def gramsOf(c: Column): Column =
-      if (spark.catalog.functionExists("graft_shingles"))
-        array_distinct(call_function("graft_shingles", c, lit(n)))
-      else array_distinct(shingles(c, n))
+    def gramsOf(c: Column): Column = array_distinct(shingleKernel(corpus, c, n))
     val benchGrams = bench
       .select(explode(gramsOf(col(textCol))).as("gram"))
       .distinct()
@@ -633,14 +622,7 @@ object TextOps {
       textCol: String,
       n: Int,
       minDocs: Long): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val grams =
-      if (spark.catalog.functionExists("graft_shingles"))
-        df.select(explode(array_distinct(
-          call_function("graft_shingles", col(textCol), lit(n)))).as("gram"))
-      else
-        df.select(explode(array_distinct(shingles(col(textCol), n))).as("gram"))
-    grams
+    df.select(explode(array_distinct(shingleKernel(df, col(textCol), n))).as("gram"))
       .groupBy("gram")
       .agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
@@ -675,24 +657,10 @@ object TextOps {
       w: Int,
       minCount: Long = 2L): org.apache.spark.sql.DataFrame = {
     require(w >= 1, "shingle width must be >= 1")
-    val spark = df.sparkSession
-    // One-pass gram generation (the codegen'd shingle kernel when the
-    // session extension is installed; a declarative slice fold otherwise
-    // — two projections there because a generator's child must be a
-    // resolved attribute, not a higher-order-function expression).
-    val gramArr =
-      if (spark.catalog.functionExists("graft_shingles"))
-        df.select(
-          col(idCol).cast("long").as("_doc"),
-          call_function("graft_shingles", col(textCol), lit(w)).as("_grams"))
-      else
-        df.select(col(idCol).cast("long").as("_doc"), tokens(col(textCol)).as("ts"))
-          .filter(size(col("ts")) >= w)
-          .select(
-            col("_doc"),
-            transform(
-              sequence(lit(0), size(col("ts")) - w),
-              i => concat_ws(" ", slice(col("ts"), i + 1, lit(w)))).as("_grams"))
+    // One-pass gram generation (the codegen'd shingle kernel).
+    val gramArr = df.select(
+      col(idCol).cast("long").as("_doc"),
+      shingleKernel(df, col(textCol), w).as("_grams"))
     val grams = gramArr
       .select(col("_doc"), posexplode(col("_grams")).as(Seq("pos", "gram")))
       .select(
@@ -760,20 +728,10 @@ object TextOps {
       textCol: String,
       w: Int): org.apache.spark.sql.DataFrame = {
     require(w >= 1, "shingle width must be >= 1")
-    val spark = corpus.sparkSession
     def gramArr(df: org.apache.spark.sql.DataFrame) =
-      if (spark.catalog.functionExists("graft_shingles"))
-        df.select(
-          col(idCol).cast("long").as("_doc"),
-          call_function("graft_shingles", col(textCol), lit(w)).as("_grams"))
-      else
-        df.select(col(idCol).cast("long").as("_doc"), tokens(col(textCol)).as("ts"))
-          .filter(size(col("ts")) >= w)
-          .select(
-            col("_doc"),
-            transform(
-              sequence(lit(0), size(col("ts")) - w),
-              i => concat_ws(" ", slice(col("ts"), i + 1, lit(w)))).as("_grams"))
+      df.select(
+        col(idCol).cast("long").as("_doc"),
+        shingleKernel(df, col(textCol), w).as("_grams"))
     def hash(c: Column): Column =
       conv(substring(md5(c), 1, 15), 16, 10).cast("long")
     val benchHashes = gramArr(bench)
@@ -854,16 +812,11 @@ object TextOps {
       textCol: String,
       minCount: Long,
       k: Int): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
     val uni = df
       .select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w")
       .agg(count(lit(1)).as("c1"))
-    val bigrams =
-      if (spark.catalog.functionExists("graft_shingles"))
-        df.select(explode(call_function("graft_shingles", col(textCol), lit(2))).as("bg"))
-      else
-        df.select(explode(shingles(col(textCol), 2)).as("bg"))
+    val bigrams = df.select(explode(shingleKernel(df, col(textCol), 2)).as("bg"))
     val bgc = bigrams.groupBy("bg").agg(count(lit(1)).as("cab"))
     val totT = uni.agg(sum("c1").as("t"))
     val totB = bgc.agg(sum("cab").as("b"))
@@ -1030,49 +983,22 @@ object TextOps {
     val c1 = c2.toSeq
       .groupBy(_._1.substring(0, 1))
       .map { case (a, xs) => a -> xs.map(_._2).sum }
-    // Kernel path: fold the bounded model state into DENSE literal arrays
-    // over the fixed alphabet and score in one codegen'd pass per row
-    // (O(1) lookups) instead of interpreted HOF lambdas doing linear
+    // Fold the bounded model state into DENSE literal arrays over the
+    // fixed alphabet and score in one codegen'd pass per row (O(1)
+    // lookups) instead of interpreted HOF lambdas doing linear
     // map-literal scans per gram.
-    if (df.sparkSession.catalog.functionExists("graft_charlm")) {
-      def sym(i: Int): Char = if (i == 26) ' ' else ('a' + i).toChar
-      val c2d: Seq[Long] = (0 until 27 * 27).map { k =>
-        c2.getOrElse(s"${sym(k / 27)}${sym(k % 27)}", 0L)
-      }
-      val c1d: Seq[Long] = (0 until 27).map(k => c1.getOrElse(sym(k).toString, 0L))
-      val r = call_function("graft_charlm", col("lm_norm"), typedLit(c2d), typedLit(c1d))
-      return base.select(
-        col(idCol),
-        r.getItem(0).cast("long").as("n_trans"),
-        r.getItem(1).cast("long").as("n_unseen"),
-        r.getItem(2).as("familiarity"))
+    def sym(i: Int): Char = if (i == 26) ' ' else ('a' + i).toChar
+    val c2d: Seq[Long] = (0 until 27 * 27).map { k =>
+      c2.getOrElse(s"${sym(k / 27)}${sym(k % 27)}", 0L)
     }
-    val m2 = typedLit(c2)
-    val m1 = typedLit(c1)
-    val probs = when(
-      length(col("lm_norm")) > 1,
-      transform(
-        sequence(lit(1), length(col("lm_norm")) - 1),
-        i => {
-          val gm = col("lm_norm").substr(i, lit(2))
-          (coalesce(element_at(m2, gm), lit(0L)) + 1L) /
-            (coalesce(element_at(m1, col("lm_norm").substr(i, lit(1))), lit(0L)) + 27L)
-        })).otherwise(array().cast("array<double>"))
-    val unseen = when(
-      length(col("lm_norm")) > 1,
-      size(filter(
-        transform(
-          sequence(lit(1), length(col("lm_norm")) - 1),
-          i => element_at(m2, col("lm_norm").substr(i, lit(2)))),
-        c => c.isNull))).otherwise(0)
-    val nTrans = greatest(length(col("lm_norm")) - 1, lit(0)).cast("long")
+    val c1d: Seq[Long] = (0 until 27).map(k => c1.getOrElse(sym(k).toString, 0L))
+    val r = Graft.kernel(df.sparkSession,
+      "graft_charlm", col("lm_norm"), typedLit(c2d), typedLit(c1d))
     base.select(
       col(idCol),
-      nTrans.as("n_trans"),
-      unseen.cast("long").as("n_unseen"),
-      when(nTrans > 0,
-        aggregate(probs, lit(0.0), (acc, x) => acc + x) / nTrans)
-        .otherwise(0.0).as("familiarity"))
+      r.getItem(0).cast("long").as("n_trans"),
+      r.getItem(1).cast("long").as("n_unseen"),
+      r.getItem(2).as("familiarity"))
   }
 
   /** Good-Turing count-of-counts: for word `n`-grams, how many DISTINCT
@@ -1266,29 +1192,21 @@ object TextOps {
       df: org.apache.spark.sql.DataFrame,
       idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
-    // One codegen'd tokenize pass for ALL languages when GraftExtensions
-    // is installed (graft.functions.TextKernels.markerHitsAll); the
-    // declarative per-language markerHits filters are interpreted HOF
-    // lambdas — |LangMarkers| of them per row. Downstream arithmetic is
-    // identical either way: the per-language hit columns feed the same
-    // total/greatest/tie-break expressions (equivalence pinned in
-    // FunctionsSpec; subexpression elimination evaluates the kernel once
-    // per row across all its element_at uses).
-    val hits: Seq[(String, Column)] =
-      if (df.sparkSession.catalog.functionExists("graft_marker_hits")) {
-        val m = call_function("graft_marker_hits", col(textCol))
-        LangMarkers.zipWithIndex.map { case ((l, _), i) =>
-          l -> element_at(m, i + 1)
-        }
-      } else {
-        val toks = tokens(col(textCol))
-        LangMarkers.map { case (l, ws) => l -> markerHits(toks, ws) }
-      }
-    langMixFromHits(df, idCol, hits)
+    // One codegen'd tokenize pass for ALL languages
+    // (graft.functions.TextKernels.markerHitsAll); the declarative twin's
+    // per-language markerHits filters are interpreted HOF lambdas —
+    // |LangMarkers| of them per row. Downstream arithmetic is identical:
+    // the per-language hit columns feed the same total/greatest/tie-break
+    // expressions (equivalence pinned in FunctionsSpec; subexpression
+    // elimination evaluates the kernel once per row across all its
+    // element_at uses).
+    val m = Graft.kernel(df.sparkSession, "graft_marker_hits", col(textCol))
+    langMixFromHits(df, idCol,
+      LangMarkers.zipWithIndex.map { case ((l, _), i) => l -> element_at(m, i + 1) })
   }
 
-  /** Declarative twin of [[languageMixProfile]] (the fallback without
-    * GraftExtensions, and the equivalence oracle for the kernel).
+  /** Declarative twin of [[languageMixProfile]], kept only as the kernel's
+    * equivalence oracle in specs.
     */
   private[graft] def languageMixProfileDeclarative(
       df: org.apache.spark.sql.DataFrame,
@@ -1328,37 +1246,32 @@ object TextOps {
       df: org.apache.spark.sql.DataFrame,
       idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
-    // Codegen'd one-pass count kernel when GraftExtensions is installed
-    // (r16): the declarative twin runs size(regexp_extract_all(...)) per
-    // pattern — materializing every matched substring into an array just
-    // to take its size, converting the row per pattern — and each count
-    // expression appears twice in the projection. graft_markup_counts
-    // counts all three patterns with bare Matcher.find() loops over ONE
-    // String conversion (identical counts: regexp_extract_all is itself
-    // a find() loop). Twin kept as fallback + equivalence oracle.
-    if (df.sparkSession.catalog.functionExists("graft_markup_counts")) {
-      val len = length(col(textCol)).cast("long")
-      return df
-        .select(col(idCol),
-          call_function("graft_markup_counts", col(textCol)).as("_mk"),
-          len.as("n_chars"))
-        .select(
-          col(idCol),
-          element_at(col("_mk"), 1).as("n_urls"),
-          element_at(col("_mk"), 2).as("n_emails"),
-          element_at(col("_mk"), 3).as("n_tags"),
-          col("n_chars"),
-          when(col("n_chars") > 0,
-            (element_at(col("_mk"), 1) + element_at(col("_mk"), 2) +
-              element_at(col("_mk"), 3)).cast("double") * 1000.0 /
-              col("n_chars").cast("double"))
-            .as("markup_per_kchar"))
-    }
-    markupDensityDeclarative(df, idCol, textCol)
+    // Codegen'd one-pass count kernel (r16): the declarative twin runs
+    // size(regexp_extract_all(...)) per pattern — materializing every
+    // matched substring into an array just to take its size, converting
+    // the row per pattern — and each count expression appears twice in
+    // the projection. graft_markup_counts counts all three patterns with
+    // bare Matcher.find() loops over ONE String conversion (identical
+    // counts: regexp_extract_all is itself a find() loop).
+    df
+      .select(col(idCol),
+        Graft.kernel(df.sparkSession, "graft_markup_counts", col(textCol)).as("_mk"),
+        length(col(textCol)).cast("long").as("n_chars"))
+      .select(
+        col(idCol),
+        element_at(col("_mk"), 1).as("n_urls"),
+        element_at(col("_mk"), 2).as("n_emails"),
+        element_at(col("_mk"), 3).as("n_tags"),
+        col("n_chars"),
+        when(col("n_chars") > 0,
+          (element_at(col("_mk"), 1) + element_at(col("_mk"), 2) +
+            element_at(col("_mk"), 3)).cast("double") * 1000.0 /
+            col("n_chars").cast("double"))
+          .as("markup_per_kchar"))
   }
 
-  /** Declarative regexp_extract_all twin of [[markupDensity]] — the
-    * no-extensions fallback and the kernel's equivalence oracle.
+  /** Declarative regexp_extract_all twin of [[markupDensity]], kept only
+    * as the kernel's equivalence oracle in specs.
     */
   private[graft] def markupDensityDeclarative(
       df: org.apache.spark.sql.DataFrame,
@@ -1517,53 +1430,39 @@ object TextOps {
     */
   def ngramRepetitionProfile(
       docs: DataFrame, idCol: String, textCol: String, na: Int = 2, nb: Int = 3): DataFrame = {
-    // The per-doc profile depends on nothing outside the row, so with the
-    // session extension installed the whole operator is ONE scan-local
-    // projection: graft_ngram_rep(text, n) returns [total, dup, top] from
-    // the row's own gram counts (empty array ⇔ the doc has < n tokens,
-    // read back as NULLs by get() — the declarative twin's left-join
-    // miss). The declarative explode → groupBy(doc, g) → groupBy(doc) →
-    // join-back spelling below (r16: was 2 agg exchanges + a join per n)
-    // stays as the no-extensions fallback and the equivalence oracle.
-    if (docs.sparkSession.catalog.functionExists("graft_ngram_rep")) {
-      def fields(arr: Column, pfx: String): Seq[Column] = {
-        val total = get(arr, lit(0))
-        val dup = get(arr, lit(1))
-        val top = get(arr, lit(2))
-        Seq(
-          total.as(s"${pfx}_total"), dup.as(s"${pfx}_dup"), top.as(s"${pfx}_top"),
-          (dup.cast("double") / total.cast("double")).as(s"${pfx}_dup_frac"),
-          (top.cast("double") / total.cast("double")).as(s"${pfx}_top_frac"))
-      }
-      return docs
-        .select(
-          col(idCol).as("doc_id"),
-          call_function("graft_ngram_rep", col(textCol), lit(na)).as("_pa"),
-          call_function("graft_ngram_rep", col(textCol), lit(nb)).as("_pb"))
-        .select(col("doc_id") +:
-          (fields(col("_pa"), s"g$na") ++ fields(col("_pb"), s"g$nb")): _*)
+    // The per-doc profile depends on nothing outside the row, so the
+    // whole operator is ONE scan-local projection: graft_ngram_rep(text,
+    // n) returns [total, dup, top] from the row's own gram counts (empty
+    // array ⇔ the doc has < n tokens, read back as NULLs by get() — the
+    // declarative twin's left-join miss). The declarative explode →
+    // groupBy(doc, g) → groupBy(doc) → join-back twin (r16: was 2 agg
+    // exchanges + a join per n) is the equivalence oracle.
+    def fields(arr: Column, pfx: String): Seq[Column] = {
+      val total = get(arr, lit(0))
+      val dup = get(arr, lit(1))
+      val top = get(arr, lit(2))
+      Seq(
+        total.as(s"${pfx}_total"), dup.as(s"${pfx}_dup"), top.as(s"${pfx}_top"),
+        (dup.cast("double") / total.cast("double")).as(s"${pfx}_dup_frac"),
+        (top.cast("double") / total.cast("double")).as(s"${pfx}_top_frac"))
     }
-    ngramRepetitionProfileDeclarative(docs, idCol, textCol, na, nb)
+    def rep(n: Int): Column =
+      Graft.kernel(docs.sparkSession, "graft_ngram_rep", col(textCol), lit(n))
+    docs
+      .select(col(idCol).as("doc_id"), rep(na).as("_pa"), rep(nb).as("_pb"))
+      .select(col("doc_id") +:
+        (fields(col("_pa"), s"g$na") ++ fields(col("_pb"), s"g$nb")): _*)
   }
 
   /** The declarative explode → two-level aggregation → join-back twin of
-    * [[ngramRepetitionProfile]] — the no-extensions fallback and the
-    * kernel's equivalence oracle (FunctionsSpec).
+    * [[ngramRepetitionProfile]] over the slice-fold [[shingles]], kept only
+    * as the kernel's equivalence oracle in specs (FunctionsSpec).
     */
   private[graft] def ngramRepetitionProfileDeclarative(
-      docs: DataFrame, idCol: String, textCol: String, na: Int = 2, nb: Int = 3,
-      useExtensions: Boolean = true): DataFrame = {
-    // `useExtensions = false` forces the no-extension shingles(Column)
-    // slice-fold branch, so the path a production session WITHOUT
-    // GraftExtensions would run stays test-pinned (the suite always
-    // installs extensions, which otherwise shadows it — r16 ADVICE).
-    def gramsOf(n: Int): Column =
-      if (useExtensions && docs.sparkSession.catalog.functionExists("graft_shingles"))
-        call_function("graft_shingles", col(textCol), lit(n))
-      else shingles(col(textCol), n)
+      docs: DataFrame, idCol: String, textCol: String, na: Int = 2, nb: Int = 3): DataFrame = {
     def profile(n: Int, pfx: String): DataFrame =
       docs
-        .select(col(idCol).as("doc_id"), explode(gramsOf(n)).as("g"))
+        .select(col(idCol).as("doc_id"), explode(shingles(col(textCol), n)).as("g"))
         .groupBy("doc_id", "g")
         .agg(count(lit(1)).as("c"))
         .groupBy("doc_id")
@@ -1596,26 +1495,24 @@ object TextOps {
     * per-row filter — no shuffle at all.
     */
   def scriptMixProfile(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // Codegen'd one-pass kernel when GraftExtensions is installed
-    // (graft.functions.TextKernels.scriptMix): the declarative twin below
-    // pays three regexp_replace passes — each allocating a rewritten copy
-    // of every row — plus a whitespace split with three rlike regex
-    // probes per token; the kernel computes all four counts in one
-    // code-point scan (equivalence spectrum-pinned in FunctionsSpec).
-    if (docs.sparkSession.catalog.functionExists("graft_script_mix")) {
-      val m = call_function("graft_script_mix", col(textCol))
-      docs.select(
-        col(idCol).as("doc_id"),
-        element_at(m, 1).as("n_latin"),
-        element_at(m, 2).as("n_cyrillic"),
-        element_at(m, 3).as("n_greek"),
-        element_at(m, 4).as("n_mixed_tokens"))
-        .withColumn("suspicious", col("n_mixed_tokens") > 0L)
-    } else scriptMixProfileDeclarative(docs, idCol, textCol)
+    // Codegen'd one-pass kernel (graft.functions.TextKernels.scriptMix):
+    // the declarative twin below pays three regexp_replace passes — each
+    // allocating a rewritten copy of every row — plus a whitespace split
+    // with three rlike regex probes per token; the kernel computes all
+    // four counts in one code-point scan (equivalence spectrum-pinned in
+    // FunctionsSpec).
+    val m = Graft.kernel(docs.sparkSession, "graft_script_mix", col(textCol))
+    docs.select(
+      col(idCol).as("doc_id"),
+      element_at(m, 1).as("n_latin"),
+      element_at(m, 2).as("n_cyrillic"),
+      element_at(m, 3).as("n_greek"),
+      element_at(m, 4).as("n_mixed_tokens"))
+      .withColumn("suspicious", col("n_mixed_tokens") > 0L)
   }
 
-  /** Declarative twin of [[scriptMixProfile]] (the fallback without
-    * GraftExtensions, and the equivalence oracle for the kernel).
+  /** Declarative twin of [[scriptMixProfile]], kept only as the kernel's
+    * equivalence oracle in specs.
     */
   private[graft] def scriptMixProfileDeclarative(
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {

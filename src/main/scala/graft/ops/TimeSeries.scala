@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Time-series regularization for event streams (north-star extension):
   * resample onto a fixed grid and carry observations forward across empty
   * buckets — the shape feature pipelines need before windowed training
@@ -59,19 +61,11 @@ object TimeSeries {
       unix_micros(col(tsCol)).as("t"),
       col(idCol).cast("long").as("i"),
       col(valCol).cast("double").as("v"))))
-    // The codegen'd one-pass kernel when the extension is registered; the
-    // interpreted HOF fold otherwise — verbatim-identical arithmetic
-    // (equivalence-pinned in FunctionsSpec), so the choice is invisible
-    // in the output bits and only removes lambda interpretation from the
-    // hot path.
+    // The codegen'd one-pass kernel: the same arithmetic as the
+    // interpreted HOF fold (equivalence-pinned in FunctionsSpec), without
+    // lambda interpretation on the hot path.
     def fold(s: org.apache.spark.sql.Column) =
-      if (df.sparkSession.catalog.functionExists("graft_ewma"))
-        call_function("graft_ewma", transform(s, _.getField("v")))
-      else
-        aggregate(
-          slice(s, lit(2), size(s) - 1),
-          element_at(s, 1).getField("v"),
-          (acc, x) => acc * 0.5 + x.getField("v") * 0.5)
+      Graft.kernel(df.sparkSession, "graft_ewma", transform(s, _.getField("v")))
     df.groupBy(col(keyCol))
       .agg(series.as("_s"))
       .select(

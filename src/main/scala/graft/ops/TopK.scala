@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Top-N ROWS per group in O(k) state — [[graft.functions.TopKAgg]]'s
   * value heap lifted to whole rows by BIT-PACKING (value, id) into one
   * long: `packed = v·2³² + id` orders by (v, id) lexicographically, so
@@ -42,7 +44,7 @@ object TopK {
             "TopK.rowsPerGroup packing domain violated: need 0 <= value < 2^31 and 0 <= id < 2^32"))))
     guarded
       .groupBy(col(groupCol))
-      .agg(call_function("graft_topk", col("_packed"), lit(k)).as("_top"))
+      .agg(Graft.kernel(df.sparkSession, "graft_topk", col("_packed"), lit(k)).as("_top"))
       .select(col(groupCol), posexplode(col("_top")).as(Seq("_pos", "_p")))
       .select(
         col(groupCol),

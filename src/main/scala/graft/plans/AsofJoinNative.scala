@@ -60,7 +60,7 @@ final case class AsofJoinBackwardPlan(
 }
 
 /** Plans [[AsofJoinBackwardPlan]] as [[AsofJoinBackwardExec]]; injected via
-  * `GraftExtensions` (`injectPlannerStrategy`).
+  * `GraftExtensions` (`injectPlannerStrategy`) or [[graft.engine.Graft.install]].
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -188,16 +188,22 @@ object RowCodec {
       case _: BooleanType => writeInt64(out, field, if (v.asInstanceOf[Boolean]) 1L else 0L)
       case _: StringType => writeString(out, field, v.asInstanceOf[String])
       case _: BinaryType => writeLenDelim(out, field, v.asInstanceOf[Array[Byte]])
-      case _: TimestampType =>
-        writeInt64(out, field, tsMicros(v.asInstanceOf[java.sql.Timestamp]))
+      case _: TimestampType | _: TimestampNTZType => writeInt64(out, field, tsMicros(v))
       case _: DateType =>
         writeInt64(out, field, v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay)
       case _: DecimalType => writeString(out, field, v.asInstanceOf[java.math.BigDecimal].toPlainString)
       case other => throw new IllegalArgumentException(s"unsupported type $other")
     }
 
-  private def tsMicros(ts: java.sql.Timestamp): Long =
-    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+  /** Epoch micros of a timestamp value: a zoned `java.sql.Timestamp`, or
+    * a zone-less `java.time.LocalDateTime` read as UTC wall time.
+    */
+  private def tsMicros(v: Any): Long = v match {
+    case ts: java.sql.Timestamp => ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+    case ldt: java.time.LocalDateTime =>
+      val i = ldt.toInstant(java.time.ZoneOffset.UTC)
+      i.getEpochSecond * 1000000L + i.getNano / 1000L
+  }
 
   /** Wrapper-types mode: scalar → google.protobuf wrapper sub-message
     * (its `value` field is number 1); timestamp → well-known Timestamp
@@ -207,8 +213,8 @@ object RowCodec {
   private def encodeWrapped(
       out: ByteArrayOutputStream, field: Int, dt: DataType, v: Any, config: CodecConfig): Unit =
     dt match {
-      case _: TimestampType =>
-        val micros = tsMicros(v.asInstanceOf[java.sql.Timestamp])
+      case _: TimestampType | _: TimestampNTZType =>
+        val micros = tsMicros(v)
         val sub = new ByteArrayOutputStream()
         val secs = Math.floorDiv(micros, 1000000L)
         val nanos = Math.floorMod(micros, 1000000L) * 1000L

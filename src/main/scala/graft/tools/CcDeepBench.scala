@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.Graft
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc deep-diameter connected-components bench (r16 brief #5): K
@@ -23,14 +23,8 @@ object CcDeepBench {
     val cliques = args(2).toLong
     val maxIter = if (args.length > 3) args(3).toInt else 60
     val runs = if (args.length > 4) args(4).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val nPathV = paths * pathLen
     // Path k occupies ids [k*L, (k+1)*L): edges (v, v+1) except at path

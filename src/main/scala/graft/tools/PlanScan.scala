@@ -1,28 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.Graft
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import scala.util.control.NonFatal
 
 /** Whole-surface plan lint: builds every SparkEntry query's physical plan
   * (no execution beyond what the query closure itself performs) and prints
   * each gate whose pre-AQE plan contains a node matching the argument
   * pattern (default: SortAggregate). Ad-hoc recon for PlanSpec sweeps —
-  * the pinned allowlists live in the specs, not here.
+  * the pinned allowlists live in the specs, not here. Runs in Bench's
+  * session profile (SPARK_GRAFT_CPUS threads, default 4).
   * Usage: PlanScan <sfDir> [nodePattern]
   */
 object PlanScan {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val pat = if (args.length > 1) args(1) else "SortAggregate"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val re = pat.r
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -31,7 +26,7 @@ object PlanScan {
         val pre = ep match { case a: AdaptiveSparkPlanExec => a.initialPlan; case x => x }
         val n = re.findAllIn(pre.toString).size
         if (n > 0) println(s"HIT $name $n")
-      } catch { case e: Throwable => println(s"SKIP $name ${e.getClass.getSimpleName}") }
+      } catch { case NonFatal(e) => println(s"SKIP $name ${e.getClass.getSimpleName}") }
     }
     spark.stop()
     println("DONE")

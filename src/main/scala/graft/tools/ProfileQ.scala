@@ -1,25 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.Graft
 
 /** Ad-hoc plan/profile harness: PRINTS the formatted physical plan and
-  * per-run wall time of one SparkEntry query on a given SF dir.
+  * per-run wall time of one SparkEntry query on a given SF dir, in
+  * Bench's session profile (SPARK_GRAFT_CPUS threads, default 4).
   * Usage: ProfileQ <sfDir> <queryName> [explainOnly]
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus)
     val fn = graft.SparkEntry.queries(name)
     val df = fn(spark, sfDir)
     df.explain("formatted")

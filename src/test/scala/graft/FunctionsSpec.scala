@@ -384,6 +384,8 @@ class FunctionsSpec extends SparkSpec {
     Seq(crafted, fixture).foreach { docs =>
       val fast = graft.ops.TextOps.ngramRepetitionProfile(docs, "doc_id", "text")
       val slow = graft.ops.TextOps.ngramRepetitionProfileDeclarative(docs, "doc_id", "text")
+      // the twin is the slice-fold shingles(Column) spelling, not a kernel
+      assert(!slow.queryExecution.analyzed.toString.contains("graft_shingles"))
       assert(fast.columns.toSeq == slow.columns.toSeq)
       val cmp = fast.columns.filter(_ != "doc_id").map(c =>
         col(s"f.$c") =!= col(s"s.$c") || col(s"f.$c").isNull =!= col(s"s.$c").isNull)
@@ -407,29 +409,40 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("repetition-profile declarative twin: no-extension shingles fallback matches") {
-    // The suite always installs GraftExtensions, so without forcing the
-    // non-catalog branch the slice-fold shingles(Column) path a session
-    // WITHOUT extensions would run is never exercised (r16 ADVICE).
+    // The twin explodes the slice-fold shingles(Column) — the spelling a
+    // session without the Graft kernels would run; its gram stream must
+    // equal the graft_shingles kernel's, doc by doc, for both widths.
     import spark.implicits._
     val docs = Seq(
       1L -> "a b a b a", 2L -> "x y z", 3L -> "w w w w w w",
       4L -> "solo", 5L -> "two tokens", 6L -> "",
       7L -> "  ragged   spacing  makes empty   tokens  ragged   spacing",
       8L -> "astral 𐐀 𐐀 astral 𐐀 𐐀 astral").toDF("doc_id", "text")
-    val ext = graft.ops.TextOps.ngramRepetitionProfileDeclarative(
+    val twin = graft.ops.TextOps.ngramRepetitionProfileDeclarative(
       docs, "doc_id", "text")
-    val noExt = graft.ops.TextOps.ngramRepetitionProfileDeclarative(
-      docs, "doc_id", "text", useExtensions = false)
-    // the forced branch must not plan the catalog kernel
-    assert(!noExt.queryExecution.analyzed.toString.contains("graft_shingles"))
-    assert(ext.queryExecution.analyzed.toString.contains("graft_shingles"))
-    assert(ext.columns.toSeq == noExt.columns.toSeq)
-    val cmp = ext.columns.filter(_ != "doc_id").map(c =>
+    assert(!twin.queryExecution.analyzed.toString.contains("graft_shingles"))
+    Seq(2, 3).foreach { n =>
+      val grams = docs.select(
+        col("doc_id"),
+        graft.ops.TextOps.shingles(col("text"), n).as("fold"),
+        graft.engine.Graft.kernel(spark, "graft_shingles", col("text"), lit(n)).as("kern"))
+      assert(grams.queryExecution.analyzed.toString.contains("graft_shingles"))
+      val diff = grams.filter(!(col("fold") <=> col("kern")))
+      assert(diff.isEmpty, diff.limit(10).collect().mkString("\n"))
+      // non-vacuity: grams present and absent both occur
+      val sizes = grams.select(col("doc_id"), size(col("kern")))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(sizes(1L) == 5 - n + 1 && sizes(4L) == 0, sizes.toString)
+    }
+    // the twin over that fallback stream equals the kernel profile
+    val fast = graft.ops.TextOps.ngramRepetitionProfile(docs, "doc_id", "text")
+    assert(fast.columns.toSeq == twin.columns.toSeq)
+    val cmp = fast.columns.filter(_ != "doc_id").map(c =>
       col(s"f.$c") =!= col(s"s.$c") || col(s"f.$c").isNull =!= col(s"s.$c").isNull)
       .reduce(_ || _)
-    val diff = ext.as("f").join(noExt.as("s"), "doc_id").filter(cmp)
+    val diff = fast.as("f").join(twin.as("s"), "doc_id").filter(cmp)
     assert(diff.isEmpty, diff.limit(10).collect().mkString("\n"))
-    assert(ext.count() == noExt.count())
+    assert(fast.count() == twin.count())
   }
 
   test("graft_ngram_rep rejects non-positive n at analysis") {

@@ -66,4 +66,28 @@ class RowCodecSpec extends SparkSpec {
     assert(new String(msg(1).head.asInstanceOf[Array[Byte]], StandardCharsets.UTF_8) == "Row")
     assert(msg(2).size == schema.fields.length) // one FieldDescriptorProto per column
   }
+
+  test("zone-less timestamps encode as UTC micros, plain and wrapped") {
+    import org.apache.spark.sql.functions.{col, expr}
+    val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select(col("l_shipdate"),
+        expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))").as("micros"))
+      .limit(200)
+    assert(df.schema("l_shipdate").dataType == TimestampNTZType)
+    val rows = df.collect()
+    assert(rows.nonEmpty)
+    val tsSchema = StructType(Seq(df.schema("l_shipdate")))
+    val wrap = graft.proto.CodecConfig(useWrapperTypes = true)
+    rows.foreach { r =>
+      val want = r.getLong(1)
+      val plain = RowCodec.encodeRow(Row(r.get(0)), tsSchema)
+      assert(RowCodec.decodeMessage(plain)(1) == Seq(want))
+      val wrapped = RowCodec.encodeRow(Row(r.get(0)), tsSchema, wrap)
+      val sub = RowCodec.decodeMessage(
+        RowCodec.decodeMessage(wrapped)(1).head.asInstanceOf[Array[Byte]])
+      def part(f: Int): Long = sub.get(f).map(_.head.asInstanceOf[Long]).getOrElse(0L)
+      assert(part(1) * 1000000L + part(2) / 1000L == want)
+    }
+    assert(RowCodec.encode(df.select("l_shipdate")).count() == rows.length)
+  }
 }

@@ -4,24 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.Graft
+
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark's
-  * getOrCreate makes this safe across suites).
+  * getOrCreate makes this safe across suites), in the one Graft session
+  * profile.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // INT96 (Spark's legacy default) carries no parquet footer statistics
-    // and so defeats timestamp zone maps (sinks.DataSkipping); write the
-    // modern stats-bearing micros type, as Iceberg mandates.
-    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, appName = "graft-test")
 
   def sfDir: String = "/root/testdata/sf0.001"
 
