@@ -2577,7 +2577,7 @@ object SparkEntry {
     "list_sum(list_transform(range(len(q.v)), i -> (q.v[i+1]-c.c[i+1])*(q.v[i+1]-c.c[i+1])))"
   // One DuckDB replay of a Lloyd round (assignment → exact sum-div-count
   // centroid update → empty clusters keep their previous centroid) —
-  // the oracle twin of Clustering.fit's loop body.
+  // the oracle twin of one round of Clustering.lloyd.
   private def oLloydRound(prev: String, n: Int) =
     s"""a$n AS (SELECT vec_id, v, cid, d FROM (
        |    SELECT q.vec_id, q.v AS v, c.cid, $oIntSqDist AS d FROM q CROSS JOIN $prev c) t

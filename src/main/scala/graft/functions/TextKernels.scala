@@ -685,11 +685,17 @@ case class NgramRepProfileF(left: Expression, right: Expression)
       // n < 1 here as an analysis error instead of silently producing a
       // nonsense profile of empty grams (r16 ADVICE). A null literal n
       // stays legal — nullSafeEval yields NULL for it, like any binary
-      // expression.
-      val n = right.eval()
-      if (n == null || n.asInstanceOf[Int] >= 1) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"graft_ngram_rep expects n >= 1, got $n")
+      // expression. A foldable n whose evaluation fails (`1/0` under
+      // ANSI) is an analysis error too, not an exception out of analysis.
+      try {
+        val n = right.eval()
+        if (n == null || n.asInstanceOf[Int] >= 1) TypeCheckResult.TypeCheckSuccess
+        else TypeCheckResult.TypeCheckFailure(
+          s"graft_ngram_rep expects n >= 1, got $n")
+      } catch {
+        case scala.util.control.NonFatal(e) => TypeCheckResult.TypeCheckFailure(
+          s"graft_ngram_rep: n (${right.sql}) failed to evaluate: ${e.getMessage}")
+      }
     } else TypeCheckResult.TypeCheckFailure(
       "graft_ngram_rep expects (string, int literal), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")

@@ -76,8 +76,9 @@ object VectorKernels {
     * `k = cents.length / d` centroids packed row-major into one flat long
     * array (centroid `c`'s dimension `i` at `cents(c*d + i)`). Returns
     * `[bestCid, bestSqDist]`. Strict `<` keeps the FIRST minimum, so ties
-    * break to the lowest centroid id — the same rule as the interpreted
-    * fold in `Clustering.assign` and the oracle's `ORDER BY d, cid`.
+    * break to the lowest centroid id — the same rule as `PQ`'s declarative
+    * argminCode twin and the oracle's `ORDER BY d, cid`. A null element of
+    * `v` raises: read as 0 it would give a wrong cluster silently.
     */
   def sqDistArgmin(v: ArrayData, cents: ArrayData): ArrayData = {
     val d = v.numElements()
@@ -90,6 +91,9 @@ object VectorKernels {
       var acc = 0L
       var i = 0
       while (i < d) {
+        if (c == 0 && v.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"graft_kmeans_assign: null vector element at position $i")
         val diff = v.getLong(i) - cents.getLong(off + i)
         acc += diff * diff
         i += 1
@@ -200,9 +204,12 @@ case class DotProductF64(left: Expression, right: Expression) extends BinaryExpr
 
 /** `graft_kmeans_assign(array<bigint>, array<bigint>) -> array<bigint>`:
   * codegen'd integer k-means assignment — `[bestCid, bestSqDist]` of the
-  * vector against the row-major flattened centroid array (both runtime
-  * columns, so the per-iteration centroids stay a broadcast plan, never a
-  * driver-side collect).
+  * vector against the row-major flattened centroid array. The integer
+  * Lloyd loop keeps its round state, the centroids, on the driver and
+  * passes them here as a literal, so a round plans no broadcast or cross
+  * join. That holds at 100 TB: the k·d longs are the ones a broadcast
+  * passed through the driver anyway, and driver state outlives any
+  * executor. A null vector element raises instead of reading as 0.
   */
 case class KmeansAssignI64(left: Expression, right: Expression) extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = {

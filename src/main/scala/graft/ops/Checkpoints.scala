@@ -3,9 +3,14 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-truncation strategy for the iterative operators (connected
-  * components, PageRank, k-means, funnel stages, streaming signature
+  * components, PageRank, funnel stages, streaming signature
   * accumulation). Each round's state frame must be cut from its growing
   * lineage or the plan (and any recompute) grows with the round count.
+  * Integer k-means and PQ are not users: their round state is a k·d-long
+  * centroid table held on the driver ([[Clustering]]). That is safe at
+  * 100 TB — a broadcast of the table passed the same longs through the
+  * driver — and no lost executor can take it, so it needs no `reliable`
+  * mode.
   *
   * Two modes, selected per-session by `spark.graft.checkpoint.mode`:
   *   - `local` (default): `localCheckpoint` — state blocks live in

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import graft.engine.Graft
 
@@ -24,21 +25,27 @@ import graft.engine.Graft
   * scale-invariance cosine similarity has; quantization noise vs float
   * k-means is bounded by the int8 step.)
   *
-  * Scale shape per iteration:
-  *   - ASSIGNMENT is scan-local: the k centroids collapse to ONE broadcast
-  *     row (k·d longs), and the argmin folds over that array inside the
-  *     row projection — no shuffle, no n×k row blow-up.
-  *   - UPDATE posexplodes (cluster, pos, val) with map-side combine, so
-  *     the shuffle carries at most k·d rows PER PARTITION (never n·d);
-  *     the new centroid array reassembles from k·d aggregated rows.
-  *   - Quantized vectors are checkpointed once via [[Checkpoints.truncate]]
-  *     (they are re-scanned every iteration; int8 inputs make this 4x
-  *     cheaper than float — `spark.graft.checkpoint.mode=reliable` swaps
-  *     every round to an executor-loss-safe reliable checkpoint).
-  * Initial centroids are the vectors of the k lowest ids (deterministic
-  * seed — k-means++ trades reproducibility for quality; callers wanting it
-  * can pass better-seeded data ids). Empty clusters keep their previous
-  * centroid (documented; the oracle replays the same rule).
+  * Scale shape: the round state — the k·d-long centroid table — lives on
+  * the driver ([[lloyd]], shared with [[PQ.pqFit]]):
+  *   - SEEDS are one ordered `limit(k)` collect: the vectors of the k
+  *     lowest ids, centroid ids 0..k-1 in id order (deterministic —
+  *     k-means++ trades reproducibility for quality; callers wanting it
+  *     can pass better-seeded data ids).
+  *   - A ROUND is one assign-and-aggregate query: the codegen'd
+  *     `graft_kmeans_assign` argmin runs scan-locally against the table as
+  *     a plan literal, and the posexploded
+  *     `(cluster, pos)` sums combine map-side, so at most k·d
+  *     `(sum, count)` rows cross the shuffle per partition and reach the
+  *     driver. The driver applies the `sum div count` mean (truncation
+  *     toward zero, as Spark's `div` and DuckDB's `//`) and the
+  *     empty-cluster rule (an empty cluster keeps its previous centroid;
+  *     the oracle replays the same rule).
+  *   - Nothing is checkpointed, packed, broadcast or joined per round; the
+  *     input projection is cached for the loop. This is safe at 100 TB: a
+  *     broadcast centroid row already passed the same k·d longs through
+  *     the driver every round, and driver-held state survives executor
+  *     loss without `spark.graft.checkpoint.mode=reliable` — a lost
+  *     executor only recomputes its share of the round query from lineage.
   */
 object Clustering {
 
@@ -52,12 +59,8 @@ object Clustering {
       vecCol: String,
       k: Int,
       iterations: Int): DataFrame = {
-    val (vecs, centroids) = fit(df, idCol, vecCol, k, iterations)
-    // vecs/centroids stay checkpointed: the returned plan reads them and a
-    // truncated lineage cannot recompute (same rule as connectedComponents'
-    // final round).
-    assign(vecs, centroids)
-      .select(col("id").as(idCol), col("cluster"), col("sqdist"))
+    val (vecs, cents) = fit(df, idCol, vecCol, k, iterations)
+    assign(vecs, cents).select(col("id").as(idCol), col("cluster"), col("sqdist"))
   }
 
   /** The centroids after `iterations` rounds: `(cid, c)` with `c` an
@@ -69,116 +72,142 @@ object Clustering {
       vecCol: String,
       k: Int,
       iterations: Int): DataFrame = {
-    val (vecs, centroids) = fit(df, idCol, vecCol, k, iterations)
-    // The caller gets centroids only — release the checkpointed input
-    // (k·d centroid rows stay pinned; the n·d vector block must not).
-    Checkpoints.unpersist(vecs)
-    centroids
+    val spark = df.sparkSession
+    import spark.implicits._
+    val cents = fit(df, idCol, vecCol, k, iterations)._2
+    cents.indices.map(i => (i.toLong, cents(i).toSeq)).toDF("cid", "c")
   }
 
-  /** One fit, both outputs: `(assignments, centroids)` — the coarse-
-    * quantizer shape [[Similarity.ivfIntTopK]] needs (cell-assigned corpus
-    * AND the centroid table for query-side probing) without paying Lloyd
-    * twice.
+  /** `(vecs, centroids)`: `vecs` is the `(id, v)` projection every plan of
+    * the fit reads (`v` array<bigint>), `centroids(cid)` the trained
+    * centroid, on the driver — one fit serves both the cell-assigned
+    * corpus ([[assign]]) and query-side probing ([[probe]]).
     */
-  def kmeansIntModel(
+  private[ops] def fit(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
-      iterations: Int): (DataFrame, DataFrame) = {
-    val (vecs, centroids) = fit(df, idCol, vecCol, k, iterations)
-    // Materialize the assignment and RELEASE the n·d quantized-vector
-    // blocks: only the assignment (3 longs/row, checkpointed) and the
-    // tiny k·d centroid table stay pinned. Without this, every model fit
-    // (e.g. each ivfIntTopK serving call) would leave a full vector block
-    // set in executor storage for the session's lifetime — the same
-    // per-call leak pageRankInt sheds after its loop.
-    val assigned = Checkpoints.truncate(
-      assign(vecs, centroids).select(col("id").as(idCol), col("cluster"), col("sqdist")))
-    Checkpoints.unpersist(vecs)
-    (assigned, centroids)
+      iterations: Int): (DataFrame, Array[Array[Long]]) = {
+    // Deliberately NOT Par.spread here: the argmin is a cheap codegen'd
+    // kernel, and a widened layout taxes every round and every consumer
+    // (ns95 ivfpq 3.9 → 5.1 s at sf0.1); the silhouette widens its own read.
+    val vecs = longVecs(df, idCol, vecCol)
+    (vecs, lloyd(vecs, k, 1, 0, iterations)(0))
   }
 
-  private def fit(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
+  /** `(id, v)` with `v` cast to array<bigint> (a codegen'd array cast). */
+  private[ops] def longVecs(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"), col(vecCol).cast(LongArray).as("v"))
+
+  private[ops] val LongArray = ArrayType(LongType)
+
+  /** The integer Lloyd loop shared by [[kmeansInt]] and [[PQ.pqFit]]:
+    * `books(j)(cid)` is subspace j's centroid `cid`. With m = 1 the whole
+    * vector `v` is clustered; with m > 1, subspace j is the slice
+    * `[j·dsub, (j+1)·dsub)` of `v` and the m problems share every round's
+    * scan. Seeds are the (sub-)vectors of the k lowest ids, cid 0..k−1 in
+    * id order, from ONE ordered collect. A round assigns each
+    * (sub-)vector to its nearest centroid (exact-long argmin, lowest-cid
+    * ties), collects the ≤ k·d `(cluster, pos, sum, count)` rows and sets
+    * each centroid to the `sum div count` mean; clusters that drew no
+    * vector keep their centroid.
+    *
+    * `vecs` is cached (not checkpointed) for the loop, so rounds re-read
+    * it without re-running its plan, and a lost block recomputes from
+    * lineage.
+    */
+  private[ops] def lloyd(
+      vecs: DataFrame,
       k: Int,
-      iterations: Int): (DataFrame, DataFrame) = {
+      m: Int,
+      dsub: Int,
+      iterations: Int): Array[Array[Array[Long]]] = {
     require(k > 0, "k must be positive")
     require(iterations >= 0, "negative iterations")
-    // Deliberately NOT Par.spread here: the assignment argmin is the
-    // codegen'd graft_kmeans_assign kernel (cheap per byte), and the
-    // checkpointed layout feeds EVERY downstream consumer — the IVF/PQ ladder runs
-    // dozens of tiny stages over these blocks, and baking a widened
-    // layout into the checkpoint charged each of them the extra task
-    // fan-out (measured: ns95 ivfpq 3.9 → 5.1 s isolated at sf0.1 from
-    // exactly this). The one genuinely interpreted heavy consumer — the
-    // silhouette scoring fold — widens its OWN read of the checkpoint.
-    val vecs = Checkpoints.truncate(
-      df.select(
-        col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("long")).as("v")))
-    // Deterministic seed: the k lowest ids, centroid ids 0..k-1 in id order.
-    val w = Window.orderBy(col("id"))
-    var centroids = Checkpoints.truncate(
-      vecs
-        .orderBy("id")
-        .limit(k)
-        .select((row_number().over(w) - 1).cast("long").as("cid"), col("v").as("c")))
-    var iter = 0
-    while (iter < iterations) {
-      val assigned = assign(vecs, centroids)
-      // Exact integer mean per (cluster, dimension): sum div count is
-      // truncation toward zero in BOTH Spark and DuckDB — deterministic.
-      val dims = assigned
-        .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "val")))
-        .groupBy("cluster", "pos")
-        .agg(sum("val").as("sv"), count(lit(1)).as("cnt"))
-        .select(col("cluster"), col("pos"), expr("sv div cnt").as("m"))
-      val rebuilt = dims
-        .groupBy("cluster")
-        .agg(
-          transform(
-            array_sort(collect_list(struct(col("pos"), col("m")))),
-            s => s.getField("m")).as("c"))
-        .withColumnRenamed("cluster", "cid")
-      // Empty clusters keep their previous centroid.
-      val next = Checkpoints.truncate(
-        centroids
-          .select(col("cid"), col("c").as("oc"))
-          .join(rebuilt, Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("c"), col("oc")).as("c")))
-      Checkpoints.unpersist(centroids)
-      centroids = next
-      iter += 1
-    }
-    (vecs, centroids)
+    if (iterations > 0) vecs.persist()
+    try {
+      val seeds = vecs.orderBy("id").limit(k).select("v").collect()
+        .map(_.getSeq[Long](0).toArray)
+      // A narrower vector's sub-vectors would not line up with the m slices.
+      if (m > 1) require(seeds.forall(_.length == m * dsub),
+        s"vectors must be ${m * dsub} wide, got widths ${seeds.map(_.length).distinct.mkString(",")}")
+      var books =
+        if (m == 1) Array(seeds)
+        else Array.tabulate(m)(j => seeds.map(_.slice(j * dsub, (j + 1) * dsub)))
+      val cluster =
+        if (m == 1) col("_cd").getItem(0)
+        else element_at(col("_cd"), (col("pos") / dsub).cast("int") + 1) // pos >= 0: floor
+      var iter = 0
+      while (iter < iterations) {
+        // Codes in their own select: beside a generator they would be
+        // evaluated once per EXPLODED row (ExtractGenerator projects the
+        // other expressions after the Generate).
+        val sums = vecs
+          .select(codes(vecs.sparkSession, col("v"), books, dsub).as("_cd"), col("v"))
+          .select(col("_cd"), posexplode(col("v")).as(Seq("pos", "val")))
+          .groupBy(cluster.as("cluster"), col("pos"))
+          .agg(sum("val").as("sv"), count(lit(1)).as("cnt"))
+          .collect()
+        val next = books.map(_.clone)
+        sums.groupBy(r => (if (m == 1) 0 else r.getInt(1) / dsub, r.getLong(0))).foreach {
+          case ((j, cid), rows) =>
+            val off = j * dsub
+            val c = new Array[Long](rows.map(_.getInt(1)).max - off + 1)
+            // Exact integer mean: Long `/` truncates toward zero, as `div`.
+            rows.foreach(r => c(r.getInt(1) - off) = r.getLong(2) / r.getLong(3))
+            next(j)(cid.toInt) = c
+        }
+        books = next
+        iter += 1
+      }
+      books
+    } finally if (iterations > 0) vecs.unpersist(blocking = false)
   }
 
-  /** Scan-local assignment: the k centroids collapse to ONE broadcast row
-    * and the codegen'd `graft_kmeans_assign` kernel runs the argmin per
-    * input row (centroids flattened row-major; cid = row index because
-    * centroid ids are 0..k-1 by construction). Ties break to the lowest
-    * cid (strict `<` keeps the first minimum; the array is sorted by cid).
+  /** The m sub-vectors of `v` (the whole vector when m = 1). */
+  private[ops] def subVectors(v: Column, m: Int, dsub: Int): Seq[Column] =
+    if (m == 1) Seq(v) else (0 until m).map(j => slice(v, j * dsub + 1, dsub))
+
+  /** array<bigint> of m codes: element j is the cid of sub-vector j's
+    * nearest centroid in `books(j)`.
     */
-  private def assign(vecs: DataFrame, centroids: DataFrame): DataFrame = {
-    val packed = centroids.agg(
-      flatten(
-        transform(
-          array_sort(collect_list(struct(col("cid"), col("c")))),
-          s => s.getField("c"))).as("cs"))
+  private[ops] def codes(
+      spark: SparkSession, v: Column, books: Array[Array[Array[Long]]], dsub: Int): Column =
+    array(subVectors(v, books.length, dsub).zip(books).map { case (sv, b) =>
+      element_at(argmin(spark, sv, b), 1)
+    }: _*)
+
+  /** `graft_kmeans_assign(v, centroids)`: `[cid, sqdist]` of the nearest
+    * centroid, the table passed as one literal flattened row-major in cid
+    * order (the kernel's argmin index is then the cid).
+    */
+  private[ops] def argmin(spark: SparkSession, v: Column, cents: Array[Array[Long]]): Column =
+    Graft.kernel(spark, "graft_kmeans_assign", v, typedLit(cents.flatten))
+
+  /** `(qid, qv, cell, c)`: each query `(qid, qv)` against its `nProbe`
+    * nearest centroids `c` (exact squared L2, ties to the lowest cell).
+    */
+  private[ops] def probe(queries: DataFrame, cents: Array[Array[Long]], nProbe: Int): DataFrame =
+    queries
+      .select(col("qid"), col("qv"), posexplode(typedLit(cents)).as(Seq("cell", "c")))
+      .withColumn("cell", col("cell").cast("long"))
+      .withColumn("pr", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(sqDist(col("qv"), col("c")), col("cell"))))
+      .filter(col("pr") <= nProbe)
+
+  /** Scan-local assignment: `(id, v, cluster, sqdist)`, the argmin of
+    * each vector against the driver-held centroids (ties to the lowest
+    * cid).
+    */
+  private[ops] def assign(vecs: DataFrame, cents: Array[Array[Long]]): DataFrame =
     vecs
-      .crossJoin(broadcast(packed)) // exactly one row — justified hint
-      .withColumn("best",
-        Graft.kernel(vecs.sparkSession, "graft_kmeans_assign", col("v"), col("cs")))
+      .withColumn("best", argmin(vecs.sparkSession, col("v"), cents))
       .select(
         col("id"),
         col("v"),
         element_at(col("best"), 1).as("cluster"),
         element_at(col("best"), 2).as("sqdist"))
-  }
 
   /** Exact squared L2 distance between two long arrays (index-order fold —
     * integer adds are associative, the order is for clarity only).
@@ -197,7 +226,7 @@ object Clustering {
     *
     * Since the assignment IS the argmin over the same centroids, a is
     * the minimum and b the second minimum of one per-row fold over the
-    * broadcast centroid array — ties to the lowest cid, matching the
+    * driver-held centroid table — ties to the lowest cid, matching the
     * k-means assignment discipline.
     *
     * Output: `(idCol, cluster, a2, b2, silhouette)` (s = 0 when b = 0 —
@@ -210,32 +239,26 @@ object Clustering {
       k: Int,
       iterations: Int): DataFrame = {
     require(k >= 2, "silhouette needs k >= 2")
-    // Reuse fit's checkpointed vector blocks for the scoring fold
-    // instead of re-projecting df (spares a second scan); vecs stays
-    // pinned (the returned plan reads the truncated lineage — the
-    // kmeansInt rule). The two-min scoring fold is an interpreted HOF
-    // chain (k nested sqDist folds per row — no codegen kernel), which
-    // serialized the whole gate on the checkpoint's 1–2 blocks in the
-    // r13 dumps (ns229: one 5.2 s pipeline over a 2-batch scan feeding
-    // a BNLJ against the 1-row centroid broadcast). Widen THIS read
-    // only — the checkpoint itself stays narrow for the cheap codegen
-    // consumers (the ns95 lesson). fanout: ~k·(3d ops + array alloc)
-    // per ~8·d input bytes through interpreted eval ≈ 500× scan-
-    // equivalent at k = 8, d = 64 (measured ~1.2 s single-task over
-    // ~550 KB of checkpointed blocks at sf0.1).
-    val (vecs, centroids) = fit(df, idCol, vecCol, k, iterations)
-    val packed = centroids.agg(
-      array_sort(collect_list(struct(col("cid"), col("c")))).as("cs"))
+    // The two-min scoring fold is an interpreted HOF chain (k nested
+    // sqDist folds per row — no codegen kernel), which serialized the
+    // whole gate on 1–2 input blocks in the r13 dumps (ns229: one 5.2 s
+    // pipeline). Widen THIS read only — fit's projection stays narrow for
+    // the cheap codegen consumers (the ns95 lesson). fanout: ~k·(3d ops +
+    // array alloc) per ~8·d input bytes through interpreted eval ≈ 500×
+    // scan-equivalent at k = 8, d = 64 (measured ~1.2 s single-task over
+    // ~550 KB of vector blocks at sf0.1).
+    val (vecs, cents) = fit(df, idCol, vecCol, k, iterations)
+    val scored = transform(typedLit(cents),
+      (c, i) => struct(sqDist(col("v"), c).as("d"), i.cast("long").as("cid")))
     Par.spread(vecs, fanout = 500)
-      .crossJoin(broadcast(packed)) // exactly one row — justified hint
       .withColumn(
         "best",
         aggregate(
-          col("cs"),
+          scored,
           struct(lit(Long.MaxValue).as("d1"), lit(-1L).as("c1"),
             lit(Long.MaxValue).as("d2")),
           (acc, s) => {
-            val d = sqDist(col("v"), s.getField("c"))
+            val d = s.getField("d")
             when(d < acc.getField("d1"),
               struct(d.as("d1"), s.getField("cid").as("c1"),
                 acc.getField("d1").as("d2")))

@@ -1147,7 +1147,7 @@ object Dedup {
     * Pipeline (every step a pure function of the input — bit-identical
     * across engines, retries, and partitionings):
     *   1. int8-quantize ([[Quantize.quantizeInt8]]) and run the
-    *      bit-reproducible integer Lloyd ([[Clustering.kmeansIntModel]]:
+    *      bit-reproducible integer Lloyd ([[Clustering.kmeansInt]]:
     *      lowest-id seed, exact long distances, sum-div-count updates,
     *      ties to the lowest cid) to assign each vector a cluster;
     *   2. candidate pairs = within-cluster id-ordered self-join;
@@ -1183,7 +1183,7 @@ object Dedup {
       iterations: Int,
       minCosine: Double): DataFrame = {
     val qz = Quantize.quantizeInt8(df, idCol, vecCol)
-    val (assigned, _) = Clustering.kmeansIntModel(qz, idCol, "qvec", k, iterations)
+    val assigned = Clustering.kmeansInt(qz, idCol, "qvec", k, iterations)
     val members = assigned.select(col(idCol).cast("long").as("vid"), col("cluster"))
     // Id-only candidate generation: both self-join sides are the same
     // (cluster, vid) subplan, so ReuseExchange computes it once.

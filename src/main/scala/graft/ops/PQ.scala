@@ -1,10 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.engine.Graft
 
 /** Product quantization over int8-quantized embeddings (north-star
   * extension): the MEMORY-BOUNDED ANN representation for corpora whose
@@ -30,17 +28,27 @@ import graft.engine.Graft
   * recall-vs-exact pin quantifies the approximation.)
   *
   * Scale shape:
-  *   - FIT runs `m` independent integer k-means (bounded driver loop;
-  *     each iteration shuffles ≤ ksub·(d/m) rows per partition with
-  *     map-side combine — [[Clustering]]'s story per subspace).
-  *   - ENCODE is scan-local: all m codebooks collapse to ONE broadcast
-  *     row (m·ksub·(d/m) = ksub·d longs) and every vector's m argmins
-  *     fold inside its own row projection. One pass, no shuffle.
+  *   - FIT is [[Clustering]]'s integer Lloyd loop over all m subspaces at
+  *     once: the codebooks (ksub·d longs) live on the driver, every
+  *     round is ONE assign-and-aggregate query whose ≤ ksub·d
+  *     `(sum, count)` rows come back to the driver, and no round
+  *     checkpoints, packs, broadcasts or joins a codebook. Safe at
+  *     100 TB for [[Clustering]]'s reasons: a broadcast codebook passed
+  *     the same longs through the driver, and driver-held state survives
+  *     executor loss without reliable checkpoints.
+  *   - ENCODE is scan-local: the codebooks ride the plan as literals and
+  *     every vector's m argmins fold inside its own row projection. One
+  *     pass, no shuffle.
   *   - SERVE joins the bounded query set (with per-query LUTs riding
   *     along, m·ksub longs each) against the CODES table — the per-row
   *     payload is m bytes of codes, never d floats; the only
   *     corpus-sized work is the per-query top-k window, the same shape
   *     as [[Similarity.bruteForceTopK]] at 1/128th the row width.
+  *
+  * Codebook contract (checked on the driver by [[pqEncode]], [[pqTopK]]
+  * and [[ivfPqTopK]]): rows `(sub, cid, c)` with every `sub` in [0, m),
+  * the cids of each subspace exactly 0..k−1, every `c` `dims/m` wide and
+  * no null cell. Anything else raises `IllegalArgumentException`.
   */
 object PQ {
 
@@ -58,84 +66,43 @@ object PQ {
       m: Int,
       ksub: Int,
       iterations: Int): DataFrame = {
+    val books = fitBooks(Clustering.longVecs(quantized, idCol, vecCol), dims, m, ksub, iterations)
+    val spark = quantized.sparkSession
+    import spark.implicits._
+    (for ((book, j) <- books.zipWithIndex.toSeq; (c, cid) <- book.zipWithIndex)
+      yield (j.toLong, cid.toLong, c.toSeq)).toDF("sub", "cid", "c")
+  }
+
+  /** The Lloyd fit on `(id, v)` rows: `books(sub)(cid)`. The m subspace
+    * problems share [[Clustering.lloyd]]'s rounds — one scan each — and
+    * their seeds: every subspace's rows share the id column, so the ksub
+    * lowest ids come from ONE ordered collect and each contributes its m
+    * sub-vectors, cid 0..ksub−1 in id order. Bit-identical to m separate
+    * [[Clustering.kmeansIntCentroids]] runs on the slices: the argmin per
+    * sub-vector folds over only that subspace's centroids and the update
+    * groups are disjoint per subspace.
+    */
+  private def fitBooks(
+      vecs: DataFrame,
+      dims: Int,
+      m: Int,
+      ksub: Int,
+      iterations: Int): Array[Array[Array[Long]]] = {
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
     require(ksub >= 1 && ksub <= 256, s"ksub=$ksub out of (0, 256]")
-    val dsub = dims / m
-    // ONE fused Lloyd over (sub, cid) keys instead of m sequential
-    // per-subspace k-means loops. Bit-identical by construction: every
-    // subspace's row set shares the SAME id column, so the per-subspace
-    // seeds (the ksub lowest ids — Clustering's deterministic rule) are
-    // the same ids in every subspace and come from ONE TakeOrdered; the
-    // per-row argmin folds over only that row's own subspace centroids
-    // (same exact-long arithmetic, same lowest-cid ties); the update is
-    // an exact integer mean per (sub, cluster, pos) — disjoint groups,
-    // same sums. What changes is the JOB count: m·(iterations+1)
-    // checkpointed Lloyd stages collapse to (iterations+1) — at the
-    // production m = 8–16 that is the difference between ~50 driver
-    // round-trips and ~3 (each all-subspace round shuffles m× the rows
-    // of one subspace round, but ≤ m·ksub·dsub = ksub·dims combine
-    // cells per partition — the same map-side bound as before).
-    val subs = Checkpoints.truncate(
-      quantized.select(
-        col(idCol).cast("long").as("id"),
-        posexplode(array((0 until m).map { j =>
-          slice(transform(col(vecCol), _.cast("long")), j * dsub + 1, dsub)
-        }: _*)).as(Seq("sub", "v")))
-        .select(col("id"), col("sub").cast("long").as("sub"), col("v")))
-    // Seeds: the ksub lowest ids, each contributing its m sub-vectors —
-    // cid 0..ksub-1 in id order within every subspace.
-    val w = Window.partitionBy(col("sub")).orderBy(col("id"))
-    var books = Checkpoints.truncate(
-      subs
-        .join(broadcast(
-          quantized.select(col(idCol).cast("long").as("id")).orderBy("id").limit(ksub)),
-          "id")
-        .select(col("sub"), (row_number().over(w) - 1).cast("long").as("cid"),
-          col("v").as("c")))
-    var iter = 0
-    while (iter < iterations) {
-      // Scan-local assignment: all m·ksub centroids collapse to ONE
-      // broadcast row. The hot path stays the codegen'd
-      // graft_kmeans_assign kernel (Clustering's assignment discipline:
-      // cid = row index because cids are 0..ksub-1 by construction) —
-      // the per-sub flattened codebook is an O(1) element_at on the
-      // broadcast row, so fusing subspaces does not trade codegen away.
-      val assigned = subs
-        .crossJoin(broadcast(perSubBooks(books, m))) // exactly one row — justified hint
-        .select(col("sub"), col("v"),
-          element_at(
-            Graft.kernel(quantized.sparkSession, "graft_kmeans_assign", col("v"),
-              element_at(col("_css"), col("sub").cast("int") + 1)),
-            1).as("cluster"))
-      val dims2 = assigned
-        .select(col("sub"), col("cluster"), posexplode(col("v")).as(Seq("pos", "val")))
-        .groupBy("sub", "cluster", "pos")
-        .agg(sum("val").as("sv"), count(lit(1)).as("cnt"))
-        .select(col("sub"), col("cluster"), col("pos"), expr("sv div cnt").as("m"))
-      val rebuilt = dims2
-        .groupBy("sub", "cluster")
-        .agg(
-          transform(
-            array_sort(collect_list(struct(col("pos"), col("m")))),
-            s => s.getField("m")).as("c"))
-        .select(col("sub"), col("cluster").as("cid"), col("c"))
-      // Empty clusters keep their previous centroid (Clustering's rule).
-      val next = Checkpoints.truncate(
-        books
-          .select(col("sub"), col("cid"), col("c").as("oc"))
-          .join(rebuilt, Seq("sub", "cid"), "left")
-          .select(col("sub"), col("cid"), coalesce(col("c"), col("oc")).as("c")))
-      Checkpoints.unpersist(books)
-      books = next
-      iter += 1
-    }
-    Checkpoints.unpersist(subs)
-    books
+    // Only the first `dims` elements are fitted — the ones pqEncode reads.
+    Clustering.lloyd(vecs.select(col("id"), slice(col("v"), 1, dims).as("v")),
+      ksub, m, dims / m, iterations)
   }
 
   /** Encode every vector to its m codes: (idCol, codes array<long>).
-    * Scan-local — the codebooks broadcast as one packed row and each
-    * row's m argmins evaluate inside its projection.
+    * Scan-local — each row's m argmins run the codegen'd
+    * `graft_kmeans_assign` kernel against its subspace's codebook, a
+    * literal, so the argmin index is the code and its strict-< first-wins
+    * rule is the lowest-cid tie rule (the specs' interpreted
+    * `PqEncodeTwin` is the equivalence oracle). Only
+    * (idCol, vecCol) are read, so caller columns cannot collide with
+    * internal ones.
     */
   def pqEncode(
       quantized: DataFrame,
@@ -144,72 +111,42 @@ object PQ {
       codebooks: DataFrame,
       dims: Int,
       m: Int): DataFrame = {
-    val dsub = dims / m
-    // Corpus-scale argmin: ride the codegen'd graft_kmeans_assign kernel
-    // (pqFit's assignment discipline — r17, guide §4/§2.3): the
-    // interpreted argminCode HOF fold ran m·ksub·dsub interpreted ops
-    // per corpus row inside an otherwise-codegen projection. Equivalence:
-    // the flattened per-subspace codebook row lists centroids in cid
-    // order (array_sort by (sub, cid)), so the kernel's argmin INDEX is
-    // the code, and its strict-< first-wins tie rule is argminCode's
-    // lowest-cid rule ([[pqEncodeDeclarative]] is the equivalence oracle).
-    // ONE long-cast pass over the vector (the cast transform is an
-    // interpreted HOF; the old spelling re-ran it once per subspace),
-    // and none at all when the column is already array<bigint> (the
-    // ivfPqTopK residual path).
-    val alreadyLong = quantized.schema(vecCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
-    }
-    val vl = if (alreadyLong) col(vecCol) else transform(col(vecCol), _.cast("long"))
-    val codes = (0 until m).map { j =>
-      element_at(
-        Graft.kernel(quantized.sparkSession, "graft_kmeans_assign",
-          slice(col("_vl"), j * dsub + 1, dsub),
-          element_at(col("_css"), j + 1)),
-        1)
-    }
+    val books = checkedBooks(codebooks, dims, m)
     quantized
-      .crossJoin(broadcast(perSubBooks(codebooks, m))) // exactly one row — justified hint
-      .withColumn("_vl", vl)
-      .select(col(idCol), array(codes: _*).as("codes"))
+      .select(col(idCol).as("_id"), col(vecCol).cast(Clustering.LongArray).as("_vl"))
+      .select(col("_id").as(idCol),
+        Clustering.codes(quantized.sparkSession, col("_vl"), books, dims / m).as("codes"))
   }
 
-  /** The m per-subspace codebooks as ONE row `_css`: element j + 1 is
-    * subspace j's centroids flattened in cid order, the layout
-    * `graft_kmeans_assign` reads (its argmin index is then the cid).
+  /** The collected codebooks, `books(sub)(cid)`, after the contract
+    * checks (see the object doc).
     */
-  private def perSubBooks(codebooks: DataFrame, m: Int): DataFrame =
-    codebooks
-      .agg(array_sort(collect_list(struct(col("sub"), col("cid"), col("c"))))
-        .as("_all"))
-      .select(transform(
-        sequence(lit(0L), lit((m - 1).toLong)),
-        j => flatten(transform(
-          filter(col("_all"), b => b.getField("sub") === j),
-          b => b.getField("c")))).as("_css"))
+  private def checkedBooks(codebooks: DataFrame, dims: Int, m: Int): Array[Array[Array[Long]]] = {
+    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
+    val rows = codebooks
+      .select(col("sub").cast("long"), col("cid").cast("long"), col("c").cast(Clustering.LongArray))
+      .collect()
+    require(rows.forall(r => !r.anyNull && !r.getSeq[Any](2).contains(null)),
+      "codebook has a null sub, cid, centroid or centroid element")
+    val bySub = rows.groupBy(_.getLong(0))
+    require(bySub.keys.forall(j => j >= 0 && j < m), s"codebook sub outside [0, $m)")
+    require(rows.nonEmpty, "empty codebook")
+    val k = bySub.values.map(_.length).max
+    checkWidths(Array.tabulate(m) { j =>
+      val book = bySub.getOrElse(j.toLong, Array.empty[Row]).sortBy(_.getLong(1))
+      val cids = book.map(_.getLong(1))
+      require(cids.sameElements(0L until k.toLong),
+        s"subspace $j cids must be exactly 0..${k - 1}, got ${cids.mkString(",")}")
+      book.map(_.getSeq[Long](2).toArray)
+    }, dims / m)
+  }
 
-  /** The interpreted argminCode twin of [[pqEncode]], kept only as the
-    * kernel's equivalence oracle in specs.
-    */
-  private[graft] def pqEncodeDeclarative(
-      quantized: DataFrame,
-      idCol: String,
-      vecCol: String,
-      codebooks: DataFrame,
-      dims: Int,
-      m: Int): DataFrame = {
-    val dsub = dims / m
-    val packed = packedBooks(codebooks)
-    val codes = (0 until m).map { j =>
-      argminCode(
-        slice(transform(col(vecCol), _.cast("long")), j * dsub + 1, dsub),
-        filter(col("_books"), b => b.getField("sub") === j))
-    }
-    quantized
-      .crossJoin(broadcast(packed)) // exactly one row — justified hint
-      .select(col(idCol), array(codes: _*).as("codes"))
+  /** `books`, after checking that every centroid is `dsub` wide. */
+  private def checkWidths(
+      books: Array[Array[Array[Long]]], dsub: Int): Array[Array[Array[Long]]] = {
+    for ((book, j) <- books.zipWithIndex; (c, cid) <- book.zipWithIndex)
+      require(c.length == dsub, s"subspace $j cid $cid is ${c.length} wide, not $dsub")
+    books
   }
 
   /** ADC top-k: (qid, rank, nid, adist) — for each query, the k corpus
@@ -227,30 +164,35 @@ object PQ {
       dims: Int,
       m: Int,
       k: Int): DataFrame = {
-    val dsub = dims / m
-    val packed = packedBooks(codebooks)
-    // Per-query LUT: for subspace j, the ksub exact distances from the
-    // query's j-th sub-vector to that subspace's centroids (cid order).
-    val luts = (0 until m).map { j =>
-      val qsub = slice(transform(col(qVecCol), _.cast("long")), j * dsub + 1, dsub)
-      transform(
-        filter(col("_books"), b => b.getField("sub") === j),
-        b => sqDistL(qsub, b.getField("c")))
-    }
-    val q = queries
-      .crossJoin(broadcast(packed)) // exactly one row — justified hint
-      .select(col(qIdCol).cast("long").as("qid"), array(luts: _*).as("_lut"))
-    // Bounded query set joins the m-byte-wide codes table; adist is m
-    // integer lookups summed — never a vector op at serve time.
+    val books = checkedBooks(codebooks, dims, m)
+    val q = queries.select(col(qIdCol).cast("long").as("qid"),
+      luts(col(qVecCol).cast(Clustering.LongArray), books, dims / m).as("_lut"))
+    adcTopK(
+      codes
+        .select(col(idCol).cast("long").as("nid"), col("codes"))
+        .crossJoin(broadcast(q)), // bounded query set — justified hint
+      m, k)
+  }
+
+  /** Per-query LUTs: element j is the ksub exact distances from the
+    * query's j-th sub-vector to subspace j's centroids, in cid order.
+    */
+  private def luts(qv: Column, books: Array[Array[Array[Long]]], dsub: Int): Column =
+    array(Clustering.subVectors(qv, books.length, dsub).zip(books).map { case (qsub, b) =>
+      transform(typedLit(b), c => Clustering.sqDist(qsub, c))
+    }: _*)
+
+  /** The top-k cut over `(nid, codes, qid, _lut)` candidate pairs: adist
+    * is m integer lookups summed — never a vector op at serve time.
+    */
+  private def adcTopK(cands: DataFrame, m: Int, k: Int): DataFrame = {
     val adist = (0 until m)
       .map(j => element_at(
         element_at(col("_lut"), j + 1),
         element_at(col("codes"), j + 1).cast("int") + 1))
       .reduce(_ + _)
     val w = Window.partitionBy("qid").orderBy(col("adist"), col("nid"))
-    codes
-      .select(col(idCol).cast("long").as("nid"), col("codes"))
-      .crossJoin(broadcast(q)) // bounded query set — justified hint
+    cands
       .filter(col("nid") =!= col("qid"))
       .withColumn("adist", adist)
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -273,12 +215,13 @@ object PQ {
     * ADC), so the full pipeline replays in the DuckDB oracle like
     * [[pqTopK]] and [[Similarity.ivfIntTopK]].
     *
-    * Scale shape: coarse fit + per-subspace fits are bounded Lloyd loops;
-    * residuals and codes compute scan-locally against ONE broadcast
-    * centroid/codebook row each; at serve time the probe table is
-    * (queries × nProbe) rows with an m·ksub-long LUT per row (AQE
-    * broadcasts it), joined on the CELL id against m-byte code rows — the
-    * corpus contributes only probed-cell candidates, never a vector.
+    * Scale shape: coarse fit + per-subspace fits are bounded Lloyd loops
+    * with driver-held state; residuals and codes compute scan-locally
+    * against driver-side centroid/codebook constants; at serve time the
+    * probe table is (queries × nProbe) rows with an m·ksub-long LUT per
+    * row (AQE broadcasts it), joined on the CELL id against m-byte code
+    * rows — the corpus contributes only probed-cell candidates, never a
+    * vector.
     * Output: (qid, rank, nid, adist).
     */
   def ivfPqTopK(
@@ -295,89 +238,27 @@ object PQ {
       iterations: Int = 2): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells, s"nProbe=$nProbe out of [1, $nCells]")
     val qz = Quantize.quantizeInt8(corpus, idCol, vecCol)
-    val (assigned, centroids) =
-      Clustering.kmeansIntModel(qz, idCol, "qvec", nCells, iterations)
-    // Residual table: one scan-local zip against the (broadcast) cell
-    // centroid — each corpus row keeps (cell, residual) only.
-    // Truncated once: pqFit re-reads it m times (one sub-Lloyd per
-    // subspace, each a multi-round loop), then encode and the cell join
-    // read it twice more — without the cut, every one of those replays
-    // the quantize → assign → centroid-join DAG from the scan.
-    val res = Checkpoints.truncate(assigned
-      .select(col(idCol), col("cluster"))
-      .join(qz.select(col(idCol), transform(col("qvec"), _.cast("long")).as("_v")), idCol)
-      .join(broadcast(centroids), col("cluster") === col("cid")) // nCells rows — justified hint
-      .select(
-        col(idCol),
-        col("cluster").as("cell"),
-        zip_with(col("_v"), col("c"), (a, b) => a - b).as("_rv")))
-    val books = pqFit(res, idCol, "_rv", dims, m, ksub, iterations)
-    val codes = pqEncode(res, idCol, "_rv", books, dims, m)
-      .join(res.select(col(idCol), col("cell")), idCol)
+    val (vecs, cells) = Clustering.fit(qz, idCol, "qvec", nCells, iterations)
+    // Residual table: one scan-local projection against the driver-held
+    // cell centroids — each corpus row keeps (cell, residual) only. Every
+    // reader (the sub-Lloyd rounds, encode) replays it from the scan: no
+    // join, no shuffle, no checkpoint.
+    val res = Clustering.assign(vecs, cells)
+      .select(col("id"), col("cluster").as("cell"),
+        zip_with(col("v"), element_at(typedLit(cells), col("cluster").cast("int") + 1),
+          (a, b) => a - b).as("v"))
+    val dsub = dims / m
+    val books = checkWidths(fitBooks(res, dims, m, ksub, iterations), dsub)
+    val codes = res.select(col("id").as("nid"), col("cell"),
+      Clustering.codes(qz.sparkSession, col("v"), books, dsub).as("codes"))
     // Query side: quantize (row-local, agrees with the corpus geometry),
     // probe the nProbe nearest cells exactly, carry the per-cell query
     // residual, and precompute the per-(query, cell) ADC lookup tables.
     val qq = Quantize.quantizeInt8(queries, idCol, vecCol)
-      .select(col(idCol).cast("long").as("qid"),
-        transform(col("qvec"), _.cast("long")).as("qv"))
-    val pw = Window.partitionBy(col("qid")).orderBy(col("d"), col("cid"))
-    val probed = qq
-      .crossJoin(broadcast(centroids)) // nCells rows — justified hint
-      .select(col("qid"), col("cid"),
-        sqDistL(col("qv"), col("c")).as("d"),
-        zip_with(col("qv"), col("c"), (a, b) => a - b).as("qres"))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= nProbe)
-      .select(col("qid"), col("cid").as("cell"), col("qres"))
-    val dsub = dims / m
-    val packed = packedBooks(books)
-    val luts = (0 until m).map { j =>
-      val qsub = slice(col("qres"), j * dsub + 1, dsub)
-      transform(
-        filter(col("_books"), b => b.getField("sub") === j),
-        b => sqDistL(qsub, b.getField("c")))
-    }
-    val probeLut = probed
-      .crossJoin(broadcast(packed)) // exactly one row — justified hint
-      .select(col("qid"), col("cell"), array(luts: _*).as("_lut"))
-    val adist = (0 until m)
-      .map(j => element_at(
-        element_at(col("_lut"), j + 1),
-        element_at(col("codes"), j + 1).cast("int") + 1))
-      .reduce(_ + _)
-    val w = Window.partitionBy("qid").orderBy(col("adist"), col("nid"))
-    codes
-      .select(col(idCol).cast("long").as("nid"), col("cell"), col("codes"))
-      .join(probeLut, "cell") // (queries × nProbe)-row side — AQE broadcasts
-      .filter(col("nid") =!= col("qid"))
-      .withColumn("adist", adist)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("adist"))
+      .select(col(idCol).cast("long").as("qid"), col("qvec").cast(Clustering.LongArray).as("qv"))
+    val probeLut = Clustering.probe(qq, cells, nProbe)
+      .select(col("qid"), col("cell"),
+        luts(zip_with(col("qv"), col("c"), (a, b) => a - b), books, dsub).as("_lut"))
+    adcTopK(codes.join(probeLut, "cell"), m, k) // (queries × nProbe)-row side — AQE broadcasts
   }
-
-  /** All m codebooks as ONE row: `_books` = array of (sub, cid, c)
-    * structs sorted by (sub, cid) — so `filter(sub = j)` yields the
-    * j-th subspace's centroids in cid order and positional indexing is
-    * code order.
-    */
-  private def packedBooks(codebooks: DataFrame): DataFrame =
-    codebooks.agg(
-      array_sort(collect_list(struct(col("sub"), col("cid"), col("c")))).as("_books"))
-
-  /** Exact-long argmin over a (sorted-by-cid) centroid struct array:
-    * strict `<` keeps the first (lowest-cid) minimum.
-    */
-  private def argminCode(sub: Column, books: Column): Column =
-    aggregate(
-      books,
-      struct(lit(Long.MaxValue).as("d"), lit(-1L).as("cid")),
-      (acc, b) => {
-        val d = sqDistL(sub, b.getField("c"))
-        when(d < acc.getField("d"), struct(d.as("d"), b.getField("cid").as("cid")))
-          .otherwise(acc)
-      }).getField("cid")
-
-  private def sqDistL(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, x) => acc + x)
 }

@@ -27,13 +27,13 @@ object Quantize {
     */
   def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     // Deliberately NOT Par.spread here: quantize output is re-read by
-    // several consumers in the ANN ladder (kmeans fit, the residual
-    // join, query-side probes), and a widening exchange at this seam is
+    // several consumers in the ANN ladder (kmeans fit, the IVF-PQ
+    // residuals, query-side probes), and a widening exchange at this seam is
     // paid once per re-execution while breaking scan-stage fusion —
     // measured a net LOSS (ns95 ivfpq 3.3 → 4.5 s isolated at sf0.1)
     // against a ~0.3 s win on the one gate whose quantize stage was the
     // bottleneck. Consumers that hold the widening decision (e.g.
-    // Clustering.fit before its checkpoint) spread their OWN frame.
+    // the silhouette's scoring read) spread their OWN frame.
     df.select(col(idCol), col(vecCol).as("_v"))
       .withColumn(
         "scale",

@@ -320,7 +320,7 @@ object Similarity {
     * quantizer never needs more; standard IVF practice) but the Lloyd
     * loop itself is DISTRIBUTED: the sample is fixed-point-quantized at
     * the largest power-of-two scale whose exact long arithmetic cannot
-    * overflow, then [[Clustering.kmeansIntCentroids]] — the
+    * overflow, then [[Clustering.fit]] — the
     * bit-reproducible integer Lloyd (lowest-id seed, exact long
     * distances, sum-div-count updates, order-independent integer sums) —
     * produces the centroids, which dequantize back to doubles. Only the
@@ -373,12 +373,10 @@ object Similarity {
     val scaled = train.select(
       col("vid"),
       transform(col("vec"), x => round(x.cast("double") * s).cast("long")).as("v"))
-    val centDf = Clustering.kmeansIntCentroids(scaled, "vid", "v", nCells, iterations = 10)
-    // Bounded model state: nCells × dims longs — the same collect class
-    // as the PQ codebooks. Row order pinned by cid.
-    val centroids: Array[Array[Double]] = centDf.orderBy("cid").collect()
-      .map(_.getAs[scala.collection.Seq[Long]]("c").map(_.toDouble / s).toArray)
-    Checkpoints.unpersist(centDf)
+    // Bounded model state: nCells × dims longs, driver-held by the Lloyd
+    // loop itself — the same class as the PQ codebooks. Index = cid.
+    val centroids: Array[Array[Double]] =
+      Clustering.fit(scaled, "vid", "v", nCells, iterations = 10)._2.map(_.map(_.toDouble / s))
     // Plain-array function val: the map closure must capture ONLY this
     // (a nested def would drag the whole method frame — session, sample —
     // into the task closure and fail serialization).
@@ -461,7 +459,7 @@ object Similarity {
 
   /** Integer-quantized IVF ANN — the DETERMINISTIC coarse-quantizer
     * variant: int8-quantize the corpus ([[Quantize.quantizeInt8]]), train a
-    * bit-reproducible integer k-means ([[Clustering.kmeansIntModel]] —
+    * bit-reproducible integer k-means ([[Clustering.fit]] —
     * deterministic lowest-id seed, exact long distances, `sum div count`
     * centroid updates, ties to the lowest cell id), probe the `nProbe`
     * nearest cells by exact integer L2, then rerank candidates with exact
@@ -512,23 +510,14 @@ object Similarity {
       nProbe: Int,
       iterations: Int = 2): DataFrame = {
     val qz = Quantize.quantizeInt8(corpus, idCol, vecCol)
-    val (assigned, centroids) =
-      Clustering.kmeansIntModel(qz, idCol, "qvec", nCells, iterations)
-    val cells = assigned.select(col(idCol).cast("long").as("nid"), col("cluster").as("cell"))
+    val (vecs, cents) = Clustering.fit(qz, idCol, "qvec", nCells, iterations)
+    val cells = Clustering.assign(vecs, cents).select(col("id").as("nid"), col("cluster").as("cell"))
     // Per-vector quantization is row-local, so quantizing the query subset
     // yields the same qvec the corpus row has — query and corpus agree on
     // the integer geometry by construction.
     val qq = Quantize.quantizeInt8(queries, idCol, vecCol)
-      .select(
-        col(idCol).cast("long").as("qid"),
-        transform(col("qvec"), x => x.cast("long")).as("qv"))
-    val pw = Window.partitionBy(col("qid")).orderBy(col("d"), col("cid"))
-    val probed = qq
-      .crossJoin(broadcast(centroids)) // nCells centroid rows — justified hint
-      .select(col("qid"), col("cid"), Clustering.sqDist(col("qv"), col("c")).as("d"))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= nProbe)
-      .select(col("qid"), col("cid").as("cell"))
+      .select(col(idCol).cast("long").as("qid"), col("qvec").cast(Clustering.LongArray).as("qv"))
+    val probed = Clustering.probe(qq, cents, nProbe).select(col("qid"), col("cell"))
     // Query vectors come from the QUERIES frame, corpus vectors from the
     // corpus — queries need not be corpus rows (an external query set must
     // rerank against its own vectors, not a corpus lookup by id).

@@ -621,9 +621,8 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("kmeansInt assignment is scan-local: one exchange per update, none for assign") {
     val q = Quantize.quantizeInt8(Tables(spark, sfDir, "embeddings"), "vec_id", "embedding")
-    // iterations=0 → pure assignment against the seed centroids: the only
-    // exchanges allowed are the broadcast of the packed 1-row centroid
-    // table (and its tiny seed aggregation) — no shuffle of the n vectors.
+    // iterations=0 → pure assignment against the seed centroids, which
+    // ride the plan as a driver-side constant — no shuffle of the n vectors.
     val p = Clustering.kmeansInt(q, "vec_id", "qvec", 4, 0)
       .queryExecution.executedPlan.toString
     val vecShuffles = "Exchange hashpartitioning\\(id".r.findAllIn(p).size

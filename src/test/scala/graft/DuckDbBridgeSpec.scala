@@ -13,6 +13,7 @@ import graft.sinks.DuckDbBridge
 class DuckDbBridgeSpec extends SparkSpec {
 
   import spark.implicits._
+  import DuckDbBridgeSpec.findDuckDbJar
 
   test("export bundle round-trips mixed types and writes a typed catalog") {
     val df = Seq(
@@ -54,23 +55,6 @@ class DuckDbBridgeSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       DuckDbBridge.duckType(CalendarIntervalType)
     }
-  }
-
-  /** A duckdb_jdbc jar present in the local offline build cache, if any —
-    * located by NAME GLOB only (no repository/host assumptions). The live
-    * test cancels cleanly when no jar exists.
-    */
-  private def findDuckDbJar(): Option[java.nio.file.Path] = {
-    val cache = Paths.get(sys.props("user.home"), ".cache", "coursier")
-    if (!Files.exists(cache)) return None
-    val s = Files.walk(cache)
-    try {
-      val hit = s.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("duckdb_jdbc-") && n.endsWith(".jar")
-      }.findFirst()
-      if (hit.isPresent) Some(hit.get) else None
-    } finally s.close()
   }
 
   test("LIVE round-trip: a real DuckDB connection attaches catalog.sql and answers") {
@@ -148,5 +132,24 @@ class DuckDbBridgeSpec extends SparkSpec {
       (1L, "1969-12-31 23:59:59.123456"),
       (2L, "1910-02-03 04:05:06.000789"),
       (3L, "2026-01-02 03:04:05.678901")))
+  }
+}
+
+object DuckDbBridgeSpec {
+  /** A duckdb_jdbc jar present in the local offline build cache, if any —
+    * located by NAME GLOB only (no repository/host assumptions). The live
+    * test cancels cleanly when no jar exists.
+    */
+  def findDuckDbJar(): Option[java.nio.file.Path] = {
+    val cache = Paths.get(sys.props("user.home"), ".cache", "coursier")
+    if (!Files.exists(cache)) return None
+    val s = Files.walk(cache)
+    try {
+      val hit = s.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("duckdb_jdbc-") && n.endsWith(".jar")
+      }.findFirst()
+      if (hit.isPresent) Some(hit.get) else None
+    } finally s.close()
   }
 }

@@ -462,6 +462,20 @@ class FunctionsSpec extends SparkSpec {
     assert(r.getSeq[Long](0) == Seq(3L, 0L, 1L))
   }
 
+  test("graft_ngram_rep: an n that fails to evaluate is an analysis error") {
+    import spark.implicits._
+    Seq(1L -> "a b c").toDF("doc_id", "text").createOrReplaceTempView("ngram_rep_eval_docs")
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(
+          "SELECT graft_ngram_rep(text, CAST(1/0 AS INT)) FROM ngram_rep_eval_docs").collect()
+      }
+      assert(e.getMessage.contains("failed to evaluate"), e.getMessage)
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
   test("graft_marker_hits language-mix profile equals the declarative twin") {
     import spark.implicits._
     val crafted = Seq(

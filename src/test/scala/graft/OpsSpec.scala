@@ -97,7 +97,7 @@ class OpsSpec extends SparkSpec {
     // twin (same flattened cid order, same strict-< lowest-cid ties).
     assert(PQ.pqEncode(qz, "vec_id", "qvec", books, dims, m)
       .queryExecution.executedPlan.toString.contains("graft_kmeans_assign"))
-    val slow = PQ.pqEncodeDeclarative(qz, "vec_id", "qvec", books, dims, m)
+    val slow = PqEncodeTwin(qz, "vec_id", "qvec", books, dims, m)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(codes == slow, "kernel encode drifted from the declarative twin")
     // array<bigint> input (the ivfPqTopK residual shape) skips the cast

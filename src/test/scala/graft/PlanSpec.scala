@@ -838,7 +838,7 @@ class PlanSpec extends SparkSpec {
     val sf01 = "/root/testdata/sf0.1"
     assume(new java.io.File(sf01).isDirectory)
     Seq(
-      "ns229_silhouette", // interpreted scoring fold over the narrow checkpoint
+      "ns229_silhouette", // interpreted scoring fold over the narrow k-means read
       "ns225_holt_winters", // post-agg HOF fold vs byte-based coalescing
       "ns68_cms_counts" // explode+hash kernel over a narrow scan
     ).foreach { name =>
@@ -846,17 +846,37 @@ class PlanSpec extends SparkSpec {
       assert(p.contains("REPARTITION_BY_NUM"),
         s"$name lost its spread exchange at sf0.1:\n$p")
     }
-    // And the COUNTER-pin (the ns95 lesson): the kmeans CHECKPOINT must
-    // stay narrow at sf0.1 — widening it charged the IVF/PQ ladder's
+    // And the COUNTER-pin (the ns95 lesson): the k-means input layout
+    // must stay narrow at sf0.1 — widening it charged the IVF/PQ ladder's
     // dozens of tiny stages the extra task fan-out (ivfpq 3.9 → 5.1 s).
-    // Only the silhouette fold's own READ widens, per the pin above.
-    val q59 = SparkEntry.queries("ns59_kmeans_int")(spark, sf01)
-    val w59 = q59.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.getNumPartitions
+    // The fit keeps no checkpoint (its round state lives on the driver),
+    // so the pin is on the plans: no spread exchange over the k-means
+    // read, neither in the Lloyd rounds the fit runs while the gate is
+    // built nor in the final assignment. Only the silhouette fold's own
+    // READ widens, per the pin above.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val onPlan = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    assert(w59.nonEmpty && w59.forall(_ <= 4),
-      s"ns59's kmeans checkpoint layout widened at sf0.1 (widths: $w59) — " +
-        "this re-charges every IVF/PQ consumer stage")
+    spark.listenerManager.register(onPlan)
+    val p59 = try {
+      val p = SparkEntry.queries("ns59_kmeans_int")(spark, sf01)
+        .queryExecution.executedPlan.toString
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 30000L)
+      p
+    } finally spark.listenerManager.unregister(onPlan)
+    val rounds = plans.toArray(Array.empty[String]).filter(_.contains("graft_kmeans_assign"))
+    assert(rounds.nonEmpty, "ns59 ran no Lloyd round while it was built")
+    rounds.foreach { r =>
+      assert(!r.contains("REPARTITION_BY_NUM"),
+        s"a Lloyd round of ns59 reads a widened layout at sf0.1 — this taxes every round:\n$r")
+    }
+    assert(p59.contains("graft_kmeans_assign") && !p59.contains("REPARTITION_BY_NUM"),
+      s"ns59's k-means read widened at sf0.1 — this re-charges every IVF/PQ consumer stage:\n$p59")
     // ns218's fix is the OPPOSITE shape: the PPS prefix pass must NOT
     // fan 10k rows across 32 range partitions (two kernel passes, GB
     // page reservations) — the adaptive width collapses it to one range

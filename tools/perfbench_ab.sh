@@ -1,0 +1,99 @@
+#!/usr/bin/env bash
+# Interleaved A/B of perfbench/run.py: the working tree against a checkout
+# of the parent, N pairs per workload on fresh seeds, alternating which
+# side runs first so a drift in host speed lands on both sides alike. Runs
+# are untraced, --seconds 14 (the BENCHMARK.json setting).
+#
+# Usage: tools/perfbench_ab.sh [-n PAIRS] [-s FIRST_SEED] PARENT_DIR [WORKLOAD...]
+#   -n  pairs per workload (default 10)
+#   -s  first seed; pair i runs seed FIRST_SEED + i on both sides (default 5001)
+#   PARENT_DIR  a checkout of the parent revision outside this tree, e.g.
+#               git clone -q . ../parent && git -C ../parent checkout -q HEAD~1
+#   WORKLOAD    default: every workload BENCHMARK.json declares
+#
+# For each workload and end-to-end metric it prints each side's median and
+# quartiles, the change's win count over the pairs, and the gap between the
+# medians next to the parent's interquartile range. Raw result lines are
+# kept in $AB_OUT (default: a new temp dir, printed at the start).
+set -euo pipefail
+
+pairs=10 seed0=5001
+usage() { sed -n '7,12p' "$0"; exit 2; }
+while getopts "n:s:" o; do
+  case $o in
+    n) pairs=$OPTARG ;;
+    s) seed0=$OPTARG ;;
+    *) usage ;;
+  esac
+done
+shift $((OPTIND - 1))
+[ $# -ge 1 ] && [ -f "$1/perfbench/run.py" ] || usage
+parent=$(cd "$1" && pwd)
+shift
+
+change=$(git rev-parse --show-toplevel)
+out=${AB_OUT:-$(mktemp -d -t perfbench-ab.XXXXXX)}
+mkdir -p "$out"
+echo "results in $out" >&2
+
+if [ $# -eq 0 ]; then
+  set -- $(python3 -c 'import json, sys; print(" ".join(w["name"] for w in json.load(open(sys.argv[1]))["workloads"]))' "$change/BENCHMARK.json")
+fi
+
+run() { # side dir workload seed
+  local line
+  line=$(cd "$2" && python3 perfbench/run.py --workload "$3" --seed "$4" --seconds 14 --trace 0 \
+    2>>"$out/$1-$3-$4.err" | tee "$out/$1-$3-$4.out" | tail -1) || true
+  printf '%s\t%s\t%s\t%s\n' "$1" "$3" "$4" "${line:-{\}}" >>"$out/results.tsv"
+  echo "$1 $3 seed $4: ${line:0:160}" >&2
+}
+
+for w in "$@"; do
+  for ((i = 0; i < pairs; i++)); do
+    s=$((seed0 + i))
+    if ((i % 2 == 0)); then
+      run parent "$parent" "$w" "$s"; run change "$change" "$w" "$s"
+    else
+      run change "$change" "$w" "$s"; run parent "$parent" "$w" "$s"
+    fi
+  done
+done
+
+python3 - "$out/results.tsv" "$change/BENCHMARK.json" "$@" <<'EOF'
+import json, statistics, sys
+
+rows = [l.rstrip("\n").split("\t") for l in open(sys.argv[1]) if l.strip()]
+metrics = json.load(open(sys.argv[2]))["end_to_end"]
+res = {}
+for side, w, seed, line in rows:
+    try:
+        res[(side, w, seed)] = json.loads(line)
+    except ValueError:
+        res[(side, w, seed)] = {}
+
+def q(xs):
+    if len(xs) < 2:
+        return (xs[0],) * 3 if xs else (float("nan"),) * 3
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+for w in sys.argv[3:]:
+    seeds = sorted({s for _, ww, s in res if ww == w}, key=int)
+    ok = {side: sum(1 for s in seeds if res.get((side, w, s), {}).get("correct")
+                    and res[(side, w, s)].get("failed") == 0) for side in ("parent", "change")}
+    print(f"{w}: {len(seeds)} pairs; correct with 0 failed: parent {ok['parent']}, change {ok['change']}")
+    for m in metrics:
+        name, lower = m["name"], m["better"] == "lower"
+        val = lambda side, s: res.get((side, w, s), {}).get("metrics", {}).get(name, {}).get("value")
+        pairs = [(val("parent", s), val("change", s)) for s in seeds]
+        pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
+        if not pairs:
+            print(f"  {name:<11} no data")
+            continue
+        pq, cq = q([p for p, _ in pairs]), q([c for _, c in pairs])
+        wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
+        print(f"  {name:<11} parent {pq[1]:.4g} [{pq[0]:.4g}, {pq[2]:.4g}]  "
+              f"change {cq[1]:.4g} [{cq[0]:.4g}, {cq[2]:.4g}]  "
+              f"change wins {wins}/{len(pairs)}  |median gap| {abs(cq[1] - pq[1]):.4g} "
+              f"vs parent IQR {pq[2] - pq[0]:.4g}  ({m['better']} is better)")
+EOF
