@@ -43,7 +43,7 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name failed at $sfDir: ${e.getMessage}")
             None
         }
@@ -419,7 +419,7 @@ object Bench {
     spark.range(1).selectExpr("upper('a')", "lower('A')", "initcap('a b')").collect()
     Tables(spark, sfDir, "lineitem").limit(1).collect()
     try SparkEntry.bucketedJoin(spark, sfDir).queryExecution.executedPlan
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // Optional profiling filter: SPARK_GRAFT_FILTER=b22,b28 runs only the
     // named query-id prefixes (isolates one query from cross-query state).
     val filter = sys.env.get("SPARK_GRAFT_FILTER")
@@ -576,11 +576,11 @@ object Bench {
               // raw up-ratio reads ~90x and only the isolated rerun
               // clears it)
               try SparkEntry.bucketedJoin(spark, dst).queryExecution.executedPlan
-              catch { case _: Throwable => () }
+              catch { case NonFatal(_) => () }
               Some(dst)
             } else None
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[bench] scale-up generation failed: ${e.getMessage}")
               None
           }
@@ -683,7 +683,7 @@ object Bench {
             .split("(?m)^==== ").toSeq.drop(1)
             .map { sec => sec.takeWhile(c => c != ' ' && c != '\n') -> sec }
             .toMap
-        } catch { case _: Throwable => Map.empty }
+        } catch { case NonFatal(_) => Map.empty }
       if (toDump.nonEmpty) {
         // Quiesce before measuring: the suite just released thousands of
         // RDD/broadcast/shuffle blocks and the ASYNC ContextCleaner + GC
@@ -765,7 +765,7 @@ object Bench {
       }
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(dest), sb.toString.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // The driver captures only a bounded tail of stdout (2000 chars in
     // BENCH_r0{1,2}.json) and the full-name/full-precision line (~4 KB)
@@ -863,7 +863,7 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("/root/repo/bench_last.json"),
         (fileDoc + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     println(line)
     spark.stop()
   }

@@ -14,7 +14,7 @@ import graft.proto.RowCodec
 import org.apache.spark.sql.sources
 
 import graft.sinks.{DataSkipping, ManagedWriter, StreamType}
-import graft.sources.{ParquetTableSource, PartitionedArrow, ScanOptions}
+import graft.sources.{Parquet, ParquetTableSource, PartitionedArrow, ScanOptions}
 import graft.streaming.Streams
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -2482,7 +2482,7 @@ object SparkEntry {
     val s2 = s.newSession()
     s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     s2.conf.set("spark.sql.sources.useV1SourceList", "")
-    s2.read.parquet(s"$dir/lineitem.parquet")
+    Parquet.read(s2, s"$dir/lineitem.parquet")
   }
 
   /** Directory-partitioned lineitem copy for ns119's DPP gate, written
@@ -3241,7 +3241,7 @@ object SparkEntry {
       val path = tmpLayoutDir(s, "graft_layout")
       Layout.writePartitioned(
         T(s, dir, "documents").select("doc_id", "n_chars", "lang"), path, Seq("lang"))
-      s.read.parquet(path)
+      Parquet.read(s, path)
         .filter(col("lang") === "en")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy("doc_id")
@@ -3258,7 +3258,7 @@ object SparkEntry {
       Layout.writeClustered(
         T(s, dir, "documents").select("doc_id", "n_chars"), path,
         clusterCols = Seq("n_chars"), numFiles = 8)
-      s.read.parquet(path)
+      Parquet.read(s, path)
         .filter(col("n_chars").between(100, 200))
         .select("doc_id", "n_chars")
         .orderBy("doc_id")
@@ -3382,7 +3382,7 @@ object SparkEntry {
       Layout.writeInterleaved(
         T(s, dir, "documents").select("doc_id", "n_chars"), path,
         colA = "n_chars", colB = "doc_id", numFiles = 8)
-      s.read.parquet(path)
+      Parquet.read(s, path)
         .filter(col("doc_id").between(100, 150))
         .select("doc_id", "n_chars")
         .orderBy("doc_id")
@@ -5726,7 +5726,7 @@ object SparkEntry {
            |SELECT l_returnflag, COUNT(*)::BIGINT AS n, ${oSum("l_extendedprice")} AS revenue
            |FROM lineitem JOIN d ON l_returnflag = d.f
            |GROUP BY 1 ORDER BY 1""".stripMargin)) { (s, dir) =>
-      val fact = s.read.parquet(dppFactDir(s, dir))
+      val fact = Parquet.read(s, dppFactDir(s, dir))
       // The md5-bucket predicate is a literal comparison (DPP's
       // selectivity heuristic accepts it) whose surviving VALUES are
       // unknowable at plan time — so the fact-side partition filter must
@@ -5768,7 +5768,7 @@ object SparkEntry {
       docs.where(col("lang") === "en")
         .withColumn("n_chars", col("n_chars") + 1000L)
         .write.mode("overwrite").partitionBy("lang").parquet(dest)
-      sOv.read.parquet(dest)
+      Parquet.read(sOv, dest)
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").cast("long").as("sum_chars"))
         .orderBy("lang", "source")

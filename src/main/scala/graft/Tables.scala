@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.sources.Parquet
+
 /** Fixture-table loader over the driver-generated parquet dirs
   * (TESTDATA.md). One parquet directory per table: `$dir/$name.parquet`.
   */
@@ -24,7 +26,7 @@ object Tables {
       // the session zone is UTC in every builder, so the NTZ cast is
       // value-preserving and both engines (Spark here, DuckDB reading the
       // same file as a naive timestamp) see identical values.
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = Parquet.read(spark, s"$dir/$name.parquet")
       df.schema("ts").dataType match {
         case LongType => // raw nanos via nanosAsLong — truncate to micros
           df.withColumn("ts", expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))"))
@@ -33,7 +35,7 @@ object Tables {
         case other =>
           throw new IllegalStateException(s"events.ts: unexpected type $other")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Register every PRESENT fixture table as a temp view (for the SQL
     * surface). Presence-checked per table: derived benchmark datasets

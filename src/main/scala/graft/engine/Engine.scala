@@ -1,8 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, count, lit}
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.GraftExtensions
@@ -156,17 +156,27 @@ final class Engine(val spark: SparkSession) extends AutoCloseable {
     */
   def ingestCreateAppend(df: DataFrame, table: String): Long = {
     val exists = spark.catalog.tableExists(table)
-    // Rows ingested are observed on the write job itself (df.observe): one
-    // pass over the input, no O(table) destination re-scans, and immune to
-    // concurrent writers appending to the same table.
-    val obs = org.apache.spark.sql.Observation(s"graft_ingest_${table}_${System.nanoTime()}")
-    df.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-      .write
-      .mode(if (exists) SaveMode.Append else SaveMode.ErrorIfExists)
-      .saveAsTable(table)
-    obs.get("rows").asInstanceOf[Long]
+    // No O(table) destination re-scan, and immune to concurrent writers
+    // appending to the same table.
+    Engine.countedWrite(df)(
+      _.write.mode(if (exists) SaveMode.Append else SaveMode.ErrorIfExists).saveAsTable(table))
   }
 
   override def close(): Unit = ()
+}
+
+object Engine {
+
+  /** Runs `write` over `df` and returns the rows it wrote, counted on the
+    * write job itself (`Dataset.observe` with a per-call [[Observation]]):
+    * one pass over the input, no read-back job. Spark merges a task's
+    * observed-metric updates only from its successful attempt, so the
+    * count is what the committed write holds even for a non-deterministic
+    * input.
+    */
+  def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
+  }
 }

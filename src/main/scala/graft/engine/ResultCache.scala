@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
+import graft.sources.Parquet
+
 /** Query result cache keyed by the CANONICALIZED analyzed plan — the
   * BigQuery result-cache behavior (the reference's host system serves
   * repeated queries from cached result sets) re-expressed on Spark: the
@@ -44,10 +46,10 @@ object ResultCache {
     val path = new Path(cacheDir, s"rc-$key")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(path, "_SUCCESS")
-    if (fs.exists(marker)) (spark.read.parquet(path.toString), true)
+    if (fs.exists(marker)) (Parquet.read(spark, path.toString), true)
     else {
       df.write.mode("overwrite").parquet(path.toString)
-      (spark.read.parquet(path.toString), false)
+      (Parquet.read(spark, path.toString), false)
     }
   }
 }

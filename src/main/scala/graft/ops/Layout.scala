@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Storage-layout operators: the data-management side of a 100 TB corpus
   * (north-star extension; the reference delegates layout entirely to its
   * warehouse — duck.go stores whatever Arrow hands it).
@@ -168,7 +170,7 @@ object Layout {
       targetFileBytes: Long): Int = {
     val (bytes, _) = dataFileStats(spark, inPath)
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(inPath).repartition(nOut).write.mode("overwrite").parquet(outPath)
+    Parquet.read(spark, inPath).repartition(nOut).write.mode("overwrite").parquet(outPath)
     dataFileStats(spark, outPath)._2
   }
 
@@ -193,7 +195,7 @@ object Layout {
       targetFileBytes: Long,
       partitionCols: Seq[String]): Int = {
     require(partitionCols.nonEmpty, "partitionCols empty — use the non-partitioned overload")
-    val df = spark.read.parquet(inPath)
+    val df = Parquet.read(spark, inPath)
     val (bytes, _) = dataFileStats(spark, inPath)
     val pCols = partitionCols.map(col)
     val counts = df.groupBy(pCols: _*).agg(count(lit(1)).as("_rows"))

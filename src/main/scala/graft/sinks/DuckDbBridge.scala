@@ -127,7 +127,7 @@ object DuckDbBridge {
     * catalog.sql).
     */
   def readBack(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/data")
+    graft.sources.Parquet.read(spark, s"$dir/data")
 
   /** LIVE DuckDB execution over an exported bundle — the connection-backed
     * half of the seam (`duck.go:104-107` is the reference's entrypoint).

@@ -43,7 +43,7 @@ object StreamType {
   * [[ManagedWriter.read]]). A crash anywhere mid-promotion leaves the
   * previous manifest as the newest one, so a manifest-consulting reader
   * sees ZERO new rows — never a prefix of the batches. (Plain
-  * `spark.read.parquet(dest)` readers ignore the underscore-prefixed
+  * parquet-directory readers of `dest` ignore the underscore-prefixed
   * manifest directory and keep working, but only get the weaker
   * prefix-visible guarantee under mid-commit crashes.)
   */
@@ -83,11 +83,12 @@ final class ManagedWriter(
   /** Append one batch. Returns rows in the batch (offset-advance analogue,
     * bigquery_write.go:460).
     *
-    * The input plan is executed exactly once: the batch lands in its own
-    * directory and the returned row count is read back from the *written*
-    * parquet footers (metadata-only — no column data is scanned and the
-    * source is not re-executed, so a non-deterministic source cannot make
-    * the count diverge from what was written).
+    * One Spark job per batch: the input plan is executed exactly once, the
+    * batch lands in its own directory, and the returned row count is
+    * observed on that same write job ([[graft.engine.Engine.countedWrite]]).
+    * Nothing is read back, and the count is of the rows the committed task
+    * attempts wrote, so a non-deterministic source cannot make it diverge
+    * from what was written.
     */
   def write(df: DataFrame): Long = {
     require(!finalized, "writer already finalized (bigquery_write.go:466 contract)")
@@ -138,11 +139,12 @@ final class ManagedWriter(
     // the NESTED relative names and the read path's basePath option
     // re-infers the partition columns, so partition PRUNING works on
     // every managed read with zero extra machinery.
-    val writer0 = df.write.options(DataSkipping.bloomWriteOptions(bloomColumns))
-    val writer = if (partitionCols.isEmpty) writer0 else writer0.partitionBy(partitionCols: _*)
-    writer.mode("errorifexists").parquet(batchDir)
+    val n = graft.engine.Engine.countedWrite(df) { d =>
+      val writer = d.write.options(DataSkipping.bloomWriteOptions(bloomColumns))
+      (if (partitionCols.isEmpty) writer else writer.partitionBy(partitionCols: _*))
+        .mode("errorifexists").parquet(batchDir)
+    }
     appended += 1
-    val n = spark.read.parquet(batchDir).count()
     if (streamType == StreamType.Committed) {
       ManagedWriter.ensureBaseManifest(fs, destDir)
       val promoted = promote(new Path(batchDir))
@@ -1694,7 +1696,7 @@ object ManagedWriter {
       case Some((v, _)) =>
         emptySnapshot(spark, fs, destDir, schemaSidecar(fs, destDir, v))
       case None =>
-        spark.read.parquet(destDir)
+        graft.sources.Parquet.read(spark, destDir)
     }
   }
 

@@ -142,7 +142,7 @@ final class ParquetTableSource(dir: String) extends TableSource {
 
   override def read(spark: SparkSession, table: String, opts: ScanOptions): DataFrame = {
     val path = s"$dir/$table.parquet"
-    var df = spark.read.parquet(path)
+    var df = Parquet.read(spark, path)
     if (opts.selectedFields.nonEmpty) {
       df = df.select(opts.selectedFields.map(col): _*)
     }

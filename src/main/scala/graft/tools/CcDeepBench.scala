@@ -38,7 +38,7 @@ object CcDeepBench {
           (col("id") * 4 + lit(nPathV) + j).as("b"))): _*)).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
     pathEdges.union(cliqueEdges).write.mode("overwrite").parquet("/tmp/graft_cc_deep")
-    val fixed = spark.read.parquet("/tmp/graft_cc_deep")
+    val fixed = graft.sources.Parquet.read(spark, "/tmp/graft_cc_deep")
     for (r <- 1 to runs) {
       val t0 = System.nanoTime()
       val cc = graft.ops.Dedup.connectedComponents(fixed, "a", "b", maxIter)

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,29 +15,6 @@ class LloydSpec extends SparkSpec {
 
   private def qz: DataFrame =
     Quantize.quantizeInt8(Tables(spark, sfDir, "embeddings"), "vec_id", "embedding")
-
-  /** Spark jobs started by `f` on this thread (tagged by a local property,
-    * counted once the listener bus has drained).
-    */
-  private def jobsOf(tag: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try {
-      f
-      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(sc, 30000L)
-      n.get
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(l)
-    }
-  }
 
   test("Lloyd job count: no per-round checkpoint or broadcast jobs") {
     val q = qz

@@ -11,10 +11,14 @@
 #               git clone -q . ../parent && git -C ../parent checkout -q HEAD~1
 #   WORKLOAD    default: every workload BENCHMARK.json declares
 #
-# For each workload and end-to-end metric it prints each side's median and
-# quartiles, the change's win count over the pairs, and the gap between the
-# medians next to the parent's interquartile range. Raw result lines are
-# kept in $AB_OUT (default: a new temp dir, printed at the start).
+# For each workload it prints every run's end-to-end metrics beside its
+# host probe (perfbench's pre/post spin times and window CPU steal), and
+# flags each pair whose two sides' steal differs by more than 2 points: a
+# median can hide one side having run on a contended host. Then, per
+# end-to-end metric, each side's median and quartiles, the change's win
+# count over the pairs, and the gap between the medians next to the
+# parent's interquartile range. Raw result lines are kept in $AB_OUT
+# (default: a new temp dir, printed at the start).
 set -euo pipefail
 
 pairs=10 seed0=5001
@@ -41,10 +45,11 @@ if [ $# -eq 0 ]; then
 fi
 
 run() { # side dir workload seed
-  local line
+  local line probe
   line=$(cd "$2" && python3 perfbench/run.py --workload "$3" --seed "$4" --seconds 14 --trace 0 \
     2>>"$out/$1-$3-$4.err" | tee "$out/$1-$3-$4.out" | tail -1) || true
-  printf '%s\t%s\t%s\t%s\n' "$1" "$3" "$4" "${line:-{\}}" >>"$out/results.tsv"
+  probe=$(grep -m1 'host probe' "$out/$1-$3-$4.out" | sed 's/^ *//') || true
+  printf '%s\t%s\t%s\t%s\t%s\n' "$1" "$3" "$4" "${line:-{\}}" "$probe" >>"$out/results.tsv"
   echo "$1 $3 seed $4: ${line:0:160}" >&2
 }
 
@@ -60,16 +65,23 @@ for w in "$@"; do
 done
 
 python3 - "$out/results.tsv" "$change/BENCHMARK.json" "$@" <<'EOF'
-import json, statistics, sys
+import json, re, statistics, sys
+
+STEAL_GAP = 2.0  # points of window CPU steal between the two sides of a pair
 
 rows = [l.rstrip("\n").split("\t") for l in open(sys.argv[1]) if l.strip()]
 metrics = json.load(open(sys.argv[2]))["end_to_end"]
-res = {}
-for side, w, seed, line in rows:
+res, probe = {}, {}
+for side, w, seed, line, *rest in rows:
     try:
         res[(side, w, seed)] = json.loads(line)
     except ValueError:
         res[(side, w, seed)] = {}
+    probe[(side, w, seed)] = rest[0] if rest else ""
+
+def steal(key):
+    m = re.search(r"window CPU steal ([0-9.]+)%", probe.get(key, ""))
+    return float(m.group(1)) if m else None
 
 def q(xs):
     if len(xs) < 2:
@@ -82,6 +94,18 @@ for w in sys.argv[3:]:
     ok = {side: sum(1 for s in seeds if res.get((side, w, s), {}).get("correct")
                     and res[(side, w, s)].get("failed") == 0) for side in ("parent", "change")}
     print(f"{w}: {len(seeds)} pairs; correct with 0 failed: parent {ok['parent']}, change {ok['change']}")
+    flagged = []
+    for s in seeds:
+        for side in ("parent", "change"):
+            ms = res.get((side, w, s), {}).get("metrics", {})
+            vals = "  ".join(f"{m['name']} {ms[m['name']]['value']:.4g}" if m["name"] in ms
+                             else f"{m['name']} -" for m in metrics)
+            print(f"  seed {s} {side:<6} {vals}  | {probe.get((side, w, s)) or 'no host probe'}")
+        sp, sc = steal(("parent", w, s)), steal(("change", w, s))
+        if sp is not None and sc is not None and abs(sp - sc) > STEAL_GAP:
+            flagged.append(f"seed {s} (parent {sp:.1f}%, change {sc:.1f}%)")
+    print(f"  steal differs by more than {STEAL_GAP:g} points in {len(flagged)} of {len(seeds)} pairs"
+          + (": " + "; ".join(flagged) if flagged else ""))
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         val = lambda side, s: res.get((side, w, s), {}).get("metrics", {}).get(name, {}).get("value")
