@@ -1,5 +1,4 @@
 package graft
-import graft.engine.Graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,27 +6,16 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Graft.session(s"local[$cpus]", cpus)
+    val spark = Cli.session()
     // Deliberately INT96, NOT outputTimestampType=TIMESTAMP_MICROS, here
     // (unlike Engine/Bench): the oracle's pandas comparator reads INT96
     // result columns as tz-naive datetimes — matching the DuckDB oracle —
     // while micros annotate UTC and hash-mismatch every timestamp column.
     spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
-    // Known-benign warning noise (every unpartitioned window is pinned
-    // by PlanSpec's adjudicated-bounded-set sweep) — keep the driver's
-    // bounded output capture for signal. See Bench.main.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
-    // Same optional isolation filter as Bench: SPARK_GRAFT_FILTER=ns27,b54
-    // dumps (and lists oracle SQL for) only the named id prefixes.
-    val filter = sys.env.get("SPARK_GRAFT_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean =
-      filter.forall(_.contains(name.split("_")(0)))
-    val failed = SparkEntry.queries.filter(kv => selected(kv._1)).flatMap { case (name, fn) =>
+    // Cli.filter applies here too: only the selected gates are dumped and
+    // listed in oracle_sql.json.
+    val failed = SparkEntry.queries.filter(kv => Cli.selected(kv._1)).flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         None
@@ -49,7 +37,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter(kv => selected(kv._1))
+      .filter(kv => Cli.selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import graft.engine.Graft
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import scala.util.control.NonFatal
 
@@ -8,16 +7,15 @@ import scala.util.control.NonFatal
   * (no execution beyond what the query closure itself performs) and prints
   * each gate whose pre-AQE plan contains a node matching the argument
   * pattern (default: SortAggregate). Ad-hoc recon for PlanSpec sweeps —
-  * the pinned allowlists live in the specs, not here. Runs in Bench's
-  * session profile (SPARK_GRAFT_CPUS threads, default 4).
+  * the pinned allowlists live in the specs, not here. Runs in the shared `Cli`
+  * session (SPARK_GRAFT_CPUS threads, default 4).
   * Usage: PlanScan <sfDir> [nodePattern]
   */
 object PlanScan {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val pat = if (args.length > 1) args(1) else "SortAggregate"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Graft.session(s"local[$cpus]", cpus)
+    val spark = graft.Cli.session()
     spark.sparkContext.setLogLevel("ERROR")
     val re = pat.r
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,18 +1,15 @@
 package graft.tools
 
-import graft.engine.Graft
-
 /** Ad-hoc plan/profile harness: PRINTS the formatted physical plan and
   * per-run wall time of one SparkEntry query on a given SF dir, in
-  * Bench's session profile (SPARK_GRAFT_CPUS threads, default 4).
+  * the shared `Cli` session (SPARK_GRAFT_CPUS threads, default 4).
   * Usage: ProfileQ <sfDir> <queryName> [explainOnly]
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Graft.session(s"local[$cpus]", cpus)
+    val spark = graft.Cli.session()
     val fn = graft.SparkEntry.queries(name)
     val df = fn(spark, sfDir)
     df.explain("formatted")

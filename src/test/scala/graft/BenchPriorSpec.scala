@@ -15,6 +15,7 @@ class BenchPriorSpec extends AnyFunSuite {
     Files.writeString(f,
       s"""{"sf": "/data/sf0.1", "queries": {"b01": 1.5, "ns103": 0.25},
          | "sf2_detail": {"sf": "/data/sf0.01", "queries": {"b01": 0.5}},
+         | "sf_up_detail": {"sf": "/tmp/up", "queries": {"b01": 9.0}},
          | "calib": {"nt": $nt, "pre_1t": 0.7, "pre_nt": 0.75}}""".stripMargin)
     f.toString
   }
@@ -28,6 +29,10 @@ class BenchPriorSpec extends AnyFunSuite {
       Map("b01" -> 0.5))
     assert(Bench.priorTimesAt(other, "/data/sf0.1", 8, identity).isEmpty)
     assert(Bench.priorTimesAt(other, "/data/sf0.01", 8, _.path("sf2_detail")).isEmpty)
+    // the scale-up rung reads its own detail node, under the same rule
+    val up = Bench.Rung("/tmp/up", Seq("b01_x"), 1, "_up", Some("sf_up_detail"))
+    assert(Bench.priorTimesAt(same, up.dir, 8, up.node) == Map("b01" -> 9.0))
+    assert(Bench.priorTimesAt(other, up.dir, 8, up.node).isEmpty)
     // and, as before, another SF dir or a missing file is no baseline either
     assert(Bench.priorTimesAt(same, "/data/sf1", 8, identity).isEmpty)
     assert(Bench.priorTimesAt(same + ".absent", "/data/sf0.1", 8, identity).isEmpty)

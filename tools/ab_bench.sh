@@ -1,7 +1,7 @@
 #!/bin/bash
 # Interleaved same-window A/B filtered bench between two compiled checkouts.
 # Usage: tools/ab_bench.sh <filter> <legs> <oldClassesRoot> [newClassesRoot]
-# Prints one line per leg: "<arm> <leg> <queries-json-fragment>".
+# Prints one line per leg: "<old|new> leg<n> <queries-json-fragment>".
 set -e
 FILTER=${1:?filter}
 LEGS=${2:-3}
@@ -29,6 +29,6 @@ run_leg() {
   echo "$tag leg$leg $(echo "$out" | python3 -c 'import json,sys; d=json.load(sys.stdin); print(json.dumps(d["queries"]))')"
 }
 for i in $(seq 1 "$LEGS"); do
-  run_leg "$OLD" r15 "$i"
-  run_leg "$NEW" head "$i"
+  run_leg "$OLD" old "$i"
+  run_leg "$NEW" new "$i"
 done
