@@ -451,7 +451,8 @@ object Bench {
   /** `big / small` rounded to 0.1 when it exceeds 15x and `big` clears
     * `floorS`; the small time is floored at 50 ms. The floors keep
     * fixed-overhead-dominated queries (session setup, tiny dims) from
-    * flagging as false positives.
+    * flagging as false positives. The 50 ms floor alone already needs
+    * `big` over 0.75 s, so only a `floorS` above that can bind.
     */
   private def scalingRatio(big: Double, small: Double, floorS: Double): Option[Double] = {
     val r = big / math.max(small, 0.05)
@@ -467,7 +468,7 @@ object Bench {
       run: Runner,
       big: Leg,
       small: Leg,
-      floorS: Double): Seq[(String, Double)] = {
+      floorS: Double = 0.0): Seq[(String, Double)] = {
     val smallTimes = small.times.toMap
     val flagged = big.times.flatMap { case (name, tb) =>
       smallTimes.get(name)
@@ -807,13 +808,14 @@ object Bench {
       }
     }
     // Each secondary rung against the primary, 10x apart: sf2 is 10x
-    // smaller (0.5 s floor on the primary time), the scale-up 10x bigger
+    // smaller (no floor on the primary time: the 50 ms floor on the sf2
+    // time already holds every flag above 0.75 s), the scale-up 10x bigger
     // (2 s floor on its own time).
     val primary = legs.head
     val screened = primary +: legs.tail.map { l =>
       val flags =
         if (l.rung.scaledFrom.isDefined) superlinear(run, l, primary, 2.0)
-        else superlinear(run, primary, l, 0.5)
+        else superlinear(run, primary, l)
       l.copy(superlinear = flags)
     }
     // Unfiltered runs always (re)write the forensics file, so a stale

@@ -29,11 +29,15 @@ class BenchScreenSpec extends AnyFunSuite {
 
   test("superlinear flags a down and an up ratio at their floors, after a min-of-2 confirm at both rungs") {
     val f = new FakeRunner(Map.empty)
-    // down: 0.5 s floor on the primary time, the sf2 time floored at 50 ms
-    val primary = leg("/p", "a_1" -> 0.8, "b_1" -> 1.9, "c_1" -> 0.7)
-    val sf2 = leg("/s", "a_1" -> 0.05, "b_1" -> 0.05, "c_1" -> 0.01)
-    assert(Bench.superlinear(f.run, primary, sf2, 0.5) == Seq("a_1" -> 16.0, "b_1" -> 38.0))
-    assert(f.calls == Seq(("/p", Seq("a_1", "b_1"), 2), ("/s", Seq("a_1", "b_1"), 2)))
+    // down: no floor on the primary time; the sf2 time floored at 50 ms is
+    // the only guard, and it holds every flag above 0.75 s (d at 15.2x, e at 15.0x)
+    val primary = leg("/p", "a_1" -> 0.8, "b_1" -> 1.9, "c_1" -> 0.7, "d_1" -> 0.76, "e_1" -> 0.75)
+    val sf2 = leg("/s", "a_1" -> 0.05, "b_1" -> 0.05, "c_1" -> 0.01, "d_1" -> 0.0, "e_1" -> 0.01)
+    val down = Seq("a_1" -> 16.0, "b_1" -> 38.0, "d_1" -> 15.2)
+    assert(Bench.superlinear(f.run, primary, sf2) == down)
+    assert(f.calls == Seq(("/p", Seq("a_1", "b_1", "d_1"), 2), ("/s", Seq("a_1", "b_1", "d_1"), 2)))
+    // so a floor of up to 0.75 s on the primary time screens the same gates
+    assert(Bench.superlinear(new FakeRunner(Map.empty).run, primary, sf2, 0.75) == down)
     // up: a 2 s floor on the up time — b's 39.8x under 2 s is no flag
     f.calls.clear()
     val up = leg("/u", "a_1" -> 2.1, "b_1" -> 1.99)
@@ -42,7 +46,7 @@ class BenchScreenSpec extends AnyFunSuite {
     assert(f.calls == Seq(("/u", Seq("a_1"), 2), ("/p", Seq("a_1"), 2)))
     // nothing over 15x: no rerun at all
     f.calls.clear()
-    assert(Bench.superlinear(f.run, leg("/p", "a_1" -> 1.0), leg("/s", "a_1" -> 0.5), 0.5).isEmpty)
+    assert(Bench.superlinear(f.run, leg("/p", "a_1" -> 1.0), leg("/s", "a_1" -> 0.5)).isEmpty)
     assert(f.calls.isEmpty)
   }
 
@@ -51,7 +55,7 @@ class BenchScreenSpec extends AnyFunSuite {
     val sf2 = leg("/s", "a_1" -> 0.1, "b_1" -> 0.1)
     // a's rerun drops it to 12x; b keeps the smaller of suite and rerun
     val f = new FakeRunner(Map("/p" -> Map("a_1" -> 1.2, "b_1" -> 3.0), "/s" -> Map("b_1" -> 0.09)))
-    assert(Bench.superlinear(f.run, primary, sf2, 0.5) == Seq("b_1" -> 17.8))
+    assert(Bench.superlinear(f.run, primary, sf2) == Seq("b_1" -> 17.8))
     val g = new FakeRunner(Map("/p" -> Map("a_1" -> 1.4)))
     val s = Bench.regressions(g.run, "/p", Seq("a_1" -> 1.6, "b_1" -> 1.6), Map("a" -> 1.0, "b" -> 1.0))
     assert(s == Screen(Seq(("b_1", 1.6, 1.0)), Seq("a")))

@@ -11,14 +11,15 @@
 #               git clone -q . ../parent && git -C ../parent checkout -q HEAD~1
 #   WORKLOAD    default: every workload BENCHMARK.json declares
 #
-# For each workload it prints every run's end-to-end metrics beside its
-# host probe (perfbench's pre/post spin times and window CPU steal), and
-# flags each pair whose two sides' steal differs by more than 2 points: a
-# median can hide one side having run on a contended host. Then, per
-# end-to-end metric, each side's median and quartiles, the change's win
+# For each workload it prints every run's end-to-end metrics and peak RSS
+# beside its host probe (perfbench's pre/post spin times and window CPU
+# steal), and flags each pair whose two sides' steal differs by more than 2
+# points: a median can hide one side having run on a contended host. Then,
+# per end-to-end metric, each side's median and quartiles, the change's win
 # count over the pairs, and the gap between the medians next to the
-# parent's interquartile range. Raw result lines are kept in $AB_OUT
-# (default: a new temp dir, printed at the start).
+# parent's interquartile range; and each side's median peak RSS, so memory
+# is read as its own metric beside a speed change. Raw result lines are
+# kept in $AB_OUT (default: a new temp dir, printed at the start).
 set -euo pipefail
 
 pairs=10 seed0=5001
@@ -45,11 +46,12 @@ if [ $# -eq 0 ]; then
 fi
 
 run() { # side dir workload seed
-  local line probe
+  local line probe rss
   line=$(cd "$2" && python3 perfbench/run.py --workload "$3" --seed "$4" --seconds 14 --trace 0 \
     2>>"$out/$1-$3-$4.err" | tee "$out/$1-$3-$4.out" | tail -1) || true
   probe=$(grep -m1 'host probe' "$out/$1-$3-$4.out" | sed 's/^ *//') || true
-  printf '%s\t%s\t%s\t%s\t%s\n' "$1" "$3" "$4" "${line:-{\}}" "$probe" >>"$out/results.tsv"
+  rss=$(awk '$1 == "peak_rss_mb" {print $2; exit}' "$out/$1-$3-$4.out") || true
+  printf '%s\t%s\t%s\t%s\t%s\t%s\n' "$1" "$3" "$4" "${line:-{\}}" "$probe" "$rss" >>"$out/results.tsv"
   echo "$1 $3 seed $4: ${line:0:160}" >&2
 }
 
@@ -71,13 +73,17 @@ STEAL_GAP = 2.0  # points of window CPU steal between the two sides of a pair
 
 rows = [l.rstrip("\n").split("\t") for l in open(sys.argv[1]) if l.strip()]
 metrics = json.load(open(sys.argv[2]))["end_to_end"]
-res, probe = {}, {}
+res, probe, rss = {}, {}, {}
 for side, w, seed, line, *rest in rows:
     try:
         res[(side, w, seed)] = json.loads(line)
     except ValueError:
         res[(side, w, seed)] = {}
     probe[(side, w, seed)] = rest[0] if rest else ""
+    try:
+        rss[(side, w, seed)] = float(rest[1])
+    except (IndexError, ValueError):
+        pass
 
 def steal(key):
     m = re.search(r"window CPU steal ([0-9.]+)%", probe.get(key, ""))
@@ -100,7 +106,9 @@ for w in sys.argv[3:]:
             ms = res.get((side, w, s), {}).get("metrics", {})
             vals = "  ".join(f"{m['name']} {ms[m['name']]['value']:.4g}" if m["name"] in ms
                              else f"{m['name']} -" for m in metrics)
-            print(f"  seed {s} {side:<6} {vals}  | {probe.get((side, w, s)) or 'no host probe'}")
+            mb = rss.get((side, w, s))
+            mb = "-" if mb is None else f"{mb:.0f}"
+            print(f"  seed {s} {side:<6} {vals}  peak_rss_mb {mb}  | {probe.get((side, w, s)) or 'no host probe'}")
         sp, sc = steal(("parent", w, s)), steal(("change", w, s))
         if sp is not None and sc is not None and abs(sp - sc) > STEAL_GAP:
             flagged.append(f"seed {s} (parent {sp:.1f}%, change {sc:.1f}%)")
@@ -120,4 +128,8 @@ for w in sys.argv[3:]:
               f"change {cq[1]:.4g} [{cq[0]:.4g}, {cq[2]:.4g}]  "
               f"change wins {wins}/{len(pairs)}  |median gap| {abs(cq[1] - pq[1]):.4g} "
               f"vs parent IQR {pq[2] - pq[0]:.4g}  ({m['better']} is better)")
+    peaks = {side: [rss[(side, w, s)] for s in seeds if (side, w, s) in rss] for side in ("parent", "change")}
+    print("  peak_rss_mb " + "  ".join(
+        f"{side} {statistics.median(v):.0f} MB (n={len(v)})" if v else f"{side} no data"
+        for side, v in peaks.items()) + "  (median JVM VmHWM)")
 EOF
