@@ -221,8 +221,8 @@ object SparkEntry {
         // stage-then-rename: a crash mid-write must never leave a partial
         // directory at the reused fixture path
         val tmpDir = s"$ipcDir-tmp-${UUID.randomUUID().toString.take(8)}"
-        graft.proto.ArrowInterchange.writeIpcDir(
-          T(s, dir, "supplier").repartition(3), tmpDir)
+        T(s, dir, "supplier").repartition(3)
+          .write.format("graft.sources.ArrowIpcSource").mode("append").save(tmpDir)
         if (!new java.io.File(tmpDir).renameTo(new java.io.File(ipcDir))) {
           org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpDir)): Unit
         }
@@ -9011,7 +9011,7 @@ object SparkEntry {
     // SQL: schema, order-free values, and every type mapping survive the
     // Arrow boundary. The result is an aggregate (25 rows), so the
     // driver materialization is bounded by design — the distributed twin
-    // (encodePartitions / writeIpcDir + the DSv2 source) is gated by a03.
+    // (the DSv2 sink and source) is gated by a03 and a04.
     Q(
       "ns237_arrow_interchange",
       Some(

@@ -1,31 +1,33 @@
 package graft.proto
 
-import java.io.ByteArrayOutputStream
-import java.nio.channels.Channels
-import java.nio.charset.StandardCharsets
+import java.io.{ByteArrayOutputStream, OutputStream}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
+import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.arrow.ArrowWriter
 import org.apache.spark.sql.types._
 
-/** Arrow IPC interchange for query results — the Spark twin of the
-  * reference's Arrow-everywhere surface: `Query` returns Arrow record
-  * batches (duck.go:190-206) and the write path serializes records to
-  * Arrow IPC (bigquery_write.go:426-440). Spark's internal format is
-  * Tungsten rows, so parity is provided at the API boundary: a
-  * `DataFrame` → Arrow IPC stream encoder (and a decoder for round-trip
-  * tests), built on the arrow-vector public API shipped with Spark.
+/** The one Spark⇄Arrow codec — the Spark twin of the reference's
+  * Arrow-everywhere surface: `Query` returns Arrow record batches
+  * (duck.go:190-206) and the write path serializes records to Arrow IPC
+  * (bigquery_write.go:426-440). It holds both type maps
+  * ([[toArrowSchema]], [[toSparkField]]) and the one IPC stream writer
+  * ([[IpcStreamWriter]]); values cross the boundary through Spark's own
+  * `ArrowWriter` (write) and `ArrowColumnVector` (read), so no value
+  * conversion is hand-written here or anywhere else.
   *
   * Scale note: `toIpcStream` is driver-side (API parity with the
   * reference's in-process RecordReader loop, bigquack.go:99-133);
-  * `encodePartitions` keeps the conversion distributed — one IPC stream
-  * per partition, no driver materialization.
+  * `encodePartitions` and the DSv2 sink keep the conversion distributed —
+  * one IPC stream per partition, no driver materialization.
   */
 object ArrowInterchange {
 
@@ -73,104 +75,103 @@ object ArrowInterchange {
       new Field(name, FieldType.nullable(t), null)
   }
 
-  /** External (Row-API) value → Arrow slot, recursing through LIST/STRUCT. */
-  private def setValue(vec: FieldVector, i: Int, dt: DataType, v: Any): Unit = (vec, dt) match {
-    case (x: BigIntVector, LongType) => x.setSafe(i, v.asInstanceOf[Long])
-    case (x: IntVector, IntegerType) => x.setSafe(i, v.asInstanceOf[Int])
-    case (x: SmallIntVector, ShortType) => x.setSafe(i, v.asInstanceOf[Short])
-    case (x: Float8Vector, DoubleType) => x.setSafe(i, v.asInstanceOf[Double])
-    case (x: Float4Vector, FloatType) => x.setSafe(i, v.asInstanceOf[Float])
-    case (x: VarCharVector, StringType) =>
-      x.setSafe(i, v.asInstanceOf[String].getBytes(StandardCharsets.UTF_8))
-    case (x: BitVector, BooleanType) => x.setSafe(i, if (v.asInstanceOf[Boolean]) 1 else 0)
-    case (x: VarBinaryVector, BinaryType) => x.setSafe(i, v.asInstanceOf[Array[Byte]])
-    case (x: TimeStampMicroTZVector, TimestampType) =>
-      val ts = v.asInstanceOf[java.sql.Timestamp]
-      x.setSafe(i, ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L)
-    case (x: TimeStampMicroVector, TimestampNTZType) =>
-      val ldt = v.asInstanceOf[java.time.LocalDateTime]
-      x.setSafe(
-        i,
-        ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L)
-    case (x: DateDayVector, DateType) =>
-      x.setSafe(i, v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
-    case (x: DecimalVector, d: DecimalType) =>
-      val bd = v match {
-        case b: java.math.BigDecimal => b
-        case b: scala.math.BigDecimal => b.bigDecimal
-        case other => throw new IllegalArgumentException(s"not a decimal: $other")
-      }
-      x.setSafe(i, bd.setScale(d.scale))
-    case (x: org.apache.arrow.vector.complex.ListVector, ArrayType(et, _)) =>
-      val elems: scala.collection.Seq[Any] = v match {
-        case s: scala.collection.Seq[_] => s // incl. mutable.ArraySeq from Row
-        case a: Array[_] => a.toSeq
-        case l: java.util.List[_] => l.asScala
-        case other => throw new IllegalArgumentException(s"not an array value: $other")
-      }
-      val start = x.startNewValue(i)
-      val dv = x.getDataVector.asInstanceOf[FieldVector]
-      elems.zipWithIndex.foreach { case (e, k) =>
-        if (e == null) dv.setNull(start + k) else setValue(dv, start + k, et, e)
-      }
-      x.endValue(i, elems.size)
-    case (x: org.apache.arrow.vector.complex.StructVector, st: StructType) =>
-      val row = v.asInstanceOf[Row]
-      x.setIndexDefined(i)
-      st.fields.zipWithIndex.foreach { case (f, k) =>
-        val child = x.getChildByOrdinal(k).asInstanceOf[FieldVector]
-        val cv = row.get(k)
-        if (cv == null) child.setNull(i) else setValue(child, i, f.dataType, cv)
-      }
-    case (other, t) => throw new IllegalArgumentException(s"unsupported ($other, $t)")
+  /** Arrow schema → StructType, the inverse of [[toArrowSchema]]. */
+  def roundTripSchema(s: ArrowSchema): StructType =
+    StructType(s.getFields.asScala.map(toSparkField).toSeq)
+
+  /** Arrow field → Spark field, recursing through LIST/STRUCT (the
+    * reference's read path is fully nested, bigquery_write.go:205-211).
+    */
+  def toSparkField(f: Field): StructField = {
+    val dt: DataType = f.getType match {
+      case t: ArrowType.Int if t.getBitWidth == 64 => LongType
+      case t: ArrowType.Int if t.getBitWidth == 32 => IntegerType
+      case t: ArrowType.Int if t.getBitWidth == 16 => ShortType
+      case t: ArrowType.FloatingPoint if t.getPrecision == FloatingPointPrecision.DOUBLE =>
+        DoubleType
+      case _: ArrowType.FloatingPoint => FloatType
+      case _: ArrowType.Utf8 => StringType
+      case _: ArrowType.Bool => BooleanType
+      case _: ArrowType.Binary => BinaryType
+      case t: ArrowType.Timestamp if t.getTimezone == null => TimestampNTZType
+      case _: ArrowType.Timestamp => TimestampType
+      case _: ArrowType.Date => DateType
+      case t: ArrowType.Decimal => DecimalType(t.getPrecision, t.getScale)
+      case _: ArrowType.List =>
+        ArrayType(toSparkField(f.getChildren.get(0)).dataType)
+      case _: ArrowType.Struct =>
+        StructType(f.getChildren.asScala.map(toSparkField).toSeq)
+      case other => throw new IllegalArgumentException(s"unsupported arrow type $other")
+    }
+    StructField(f.getName, dt)
+  }
+
+  /** The one Arrow IPC stream writer: Catalyst rows in, a schema message
+    * plus record batches of `batchSize` rows out (the reference's
+    * batch-at-a-time granularity, bigquack.go:113-132). Spark's
+    * `ArrowWriter` fills the vectors, and each full batch is written
+    * immediately, so the only resident Arrow state is one batch whatever
+    * the stream's length. `finish` writes the end-of-stream marker;
+    * `close` frees the Arrow memory. The caller owns `out`.
+    */
+  final class IpcStreamWriter(schema: StructType, out: OutputStream, batchSize: Int = 4096)
+      extends AutoCloseable {
+    private val allocator = new RootAllocator()
+    private val root = VectorSchemaRoot.create(toArrowSchema(schema), allocator)
+    private val vectors = ArrowWriter.create(root)
+    private val stream = new ArrowStreamWriter(root, null, out)
+    private var inBatch = 0
+    private var rows = 0L
+    stream.start()
+
+    def write(row: InternalRow): Unit = {
+      vectors.write(row)
+      inBatch += 1
+      rows += 1
+      if (inBatch == batchSize) flush()
+    }
+
+    private def flush(): Unit = if (inBatch > 0) {
+      vectors.finish()
+      stream.writeBatch()
+      vectors.reset()
+      inBatch = 0
+    }
+
+    /** Write the last partial batch and the end marker; returns rows written. */
+    def finish(): Long = {
+      flush()
+      stream.end()
+      rows
+    }
+
+    override def close(): Unit =
+      try root.close() finally allocator.close()
+  }
+
+  /** Encode Catalyst rows as one complete IPC stream into `out`. */
+  private def writeStream(
+      rows: Iterator[InternalRow], schema: StructType, out: OutputStream, batchSize: Int): Long = {
+    val w = new IpcStreamWriter(schema, out, batchSize)
+    try {
+      rows.foreach(w.write)
+      w.finish()
+    } finally w.close()
+  }
+
+  /** External rows → Catalyst rows, through Spark's own serializer. */
+  private def serialized(rows: Iterator[Row], schema: StructType): Iterator[InternalRow] = {
+    val toInternal = ExpressionEncoder(schema, lenient = true).createSerializer()
+    rows.map(toInternal)
   }
 
   /** Encode rows as one Arrow IPC stream (schema message + record batches
-    * of `batchSize` rows — the reference's batch-at-a-time granularity,
-    * bigquack.go:113-132).
+    * of `batchSize` rows).
     */
   def toIpcStream(rows: Iterator[Row], schema: StructType, batchSize: Int = 4096): Array[Byte] = {
-    val allocator = new RootAllocator()
-    val root = VectorSchemaRoot.create(toArrowSchema(schema), allocator)
     val out = new ByteArrayOutputStream()
-    val writer = new ArrowStreamWriter(root, null, Channels.newChannel(out))
-    try {
-      writer.start()
-      writeBatches(rows, schema, root, writer, batchSize)
-      writer.end()
-      out.toByteArray
-    } finally {
-      writer.close()
-      root.close()
-      allocator.close()
-    }
-  }
-
-  /** Shared batch-encode loop: fill `root` with up to `batchSize` rows at
-    * a time and write each batch immediately, so the only resident Arrow
-    * state is one batch regardless of result size. Returns rows written.
-    */
-  private def writeBatches(
-      rows: Iterator[Row],
-      schema: StructType,
-      root: VectorSchemaRoot,
-      writer: ArrowStreamWriter,
-      batchSize: Int): Long = {
-    var written = 0L
-    rows.grouped(batchSize).foreach { batch =>
-      root.allocateNew()
-      batch.zipWithIndex.foreach { case (row, i) =>
-        schema.fields.zipWithIndex.foreach { case (f, j) =>
-          val vec = root.getVector(j)
-          val v = row.get(j)
-          if (v == null) vec.setNull(i) else setValue(vec, i, f.dataType, v)
-        }
-      }
-      root.setRowCount(batch.size)
-      writer.writeBatch()
-      written += batch.size
-    }
-    written
+    writeStream(serialized(rows, schema), schema, out, batchSize)
+    out.toByteArray
   }
 
   /** Driver-side query → Arrow IPC (≈ Query + consumer loop,
@@ -193,47 +194,15 @@ object ArrowInterchange {
   def queryArrowStream(
       df: DataFrame,
       out: java.io.OutputStream,
-      batchSize: Int = 4096): Long = {
-    val schema = df.schema
-    val allocator = new RootAllocator()
-    val root = VectorSchemaRoot.create(toArrowSchema(schema), allocator)
-    val writer = new ArrowStreamWriter(root, null, Channels.newChannel(out))
-    try {
-      writer.start()
-      val n = writeBatches(df.toLocalIterator().asScala, schema, root, writer, batchSize)
-      writer.end()
-      n
-    } finally {
-      writer.close()
-      root.close()
-      allocator.close()
-    }
-  }
+      batchSize: Int = 4096): Long =
+    writeStream(serialized(df.toLocalIterator().asScala, df.schema), df.schema, out, batchSize)
 
   /** Distributed encode: one IPC stream per partition (binary column). */
   def encodePartitions(df: DataFrame, batchSize: Int = 4096): DataFrame = {
     val schema = df.schema
-    val spark = df.sparkSession
-    import spark.implicits._
     df.mapPartitions(it => Iterator.single(toIpcStream(it, schema, batchSize)))(
         org.apache.spark.sql.Encoders.BINARY)
       .toDF("arrow_ipc")
-  }
-
-  /** Materialize a DataFrame as a directory of Arrow IPC stream files
-    * (one per partition) — the fixture side of the
-    * [[graft.sources.ArrowIpcSource]] DSv2 read path. Driver-side writer
-    * (test/fixture harness); the scale-relevant half is the distributed
-    * DSv2 scan that reads these files back.
-    */
-  def writeIpcDir(df: DataFrame, dir: String, batchSize: Int = 4096): Unit = {
-    val parts = encodePartitions(df, batchSize).collect()
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    parts.zipWithIndex.foreach { case (r, i) =>
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, f"part-$i%05d.arrow"),
-        r.getAs[Array[Byte]](0))
-    }
   }
 
   /** Decode an IPC stream back to (columnNames, rows) for round-trip

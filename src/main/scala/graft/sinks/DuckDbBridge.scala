@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.proto.ArrowInterchange
+
 /** DuckDB interop seam — the Spark-native answer to the reference's
   * ADBC/DuckDB bridge (`duck.go:79-255`: BigQuack opens a DuckDB database
   * over ADBC and ingests Arrow batches so users can keep querying in
@@ -182,36 +184,6 @@ object DuckDbBridge {
     conn
   }
 
-  /** Scalar Arrow field → Spark type (inverse of the
-    * [[graft.proto.ArrowInterchange]] scalar mapping) — the live-ingest
-    * path negotiates its table schema from the Arrow stream itself, the
-    * way the reference's ADBC ingest does from the record batch.
-    */
-  private def sparkTypeOfArrow(
-      t: org.apache.arrow.vector.types.pojo.ArrowType): DataType = {
-    import org.apache.arrow.vector.types.pojo.ArrowType
-    t match {
-      case i: ArrowType.Int if i.getBitWidth == 64 => LongType
-      case i: ArrowType.Int if i.getBitWidth == 32 => IntegerType
-      case i: ArrowType.Int if i.getBitWidth == 16 => ShortType
-      case f: ArrowType.FloatingPoint
-          if f.getPrecision == org.apache.arrow.vector.types.FloatingPointPrecision.DOUBLE =>
-        DoubleType
-      case f: ArrowType.FloatingPoint
-          if f.getPrecision == org.apache.arrow.vector.types.FloatingPointPrecision.SINGLE =>
-        FloatType
-      case _: ArrowType.Utf8 => StringType
-      case _: ArrowType.Bool => BooleanType
-      case _: ArrowType.Binary => BinaryType
-      case ts: ArrowType.Timestamp if ts.getTimezone != null => TimestampType
-      case _: ArrowType.Timestamp => TimestampNTZType
-      case _: ArrowType.Date => DateType
-      case d: ArrowType.Decimal => DecimalType(d.getPrecision, d.getScale)
-      case other =>
-        throw new IllegalArgumentException(s"live ingest: unsupported Arrow type $other")
-    }
-  }
-
   /** JDBC result-set column → Spark type, for marshaling live query
     * results back out as Arrow. DuckDB's TIMESTAMP is zone-less →
     * TimestampNTZ (TypeMapping §1.3).
@@ -240,8 +212,10 @@ object DuckDbBridge {
     * record batches into a bound statement). Takes an Arrow IPC stream
     * (from [[graft.proto.ArrowInterchange.toIpcStream]]), creates `table`
     * on a live in-process connection with the schema declared by the
-    * stream itself, and INSERTs batch-at-a-time — one `executeBatch` per
-    * Arrow record batch, preserving the stream's granularity; no file
+    * stream itself (read through `ArrowInterchange.toSparkField`, the one
+    * Arrow→Spark type map), and INSERTs batch-at-a-time — one
+    * `executeBatch` per Arrow record batch, preserving the stream's
+    * granularity; no file
     * ever touches disk. Each query's result comes back as an Arrow IPC
     * stream, so the round trip is Arrow-in/Arrow-out like the
     * reference's `Query` (duck.go:190-206).
@@ -249,7 +223,9 @@ object DuckDbBridge {
     * Driver-side by design (same class as `runLive`): this is the
     * interactive attach seam, not a data-plane operator — a 100 TB
     * handoff goes through `export`'s distributed parquet bundle.
-    * Scalars only: the ADBC wire the reference speaks is flat here too.
+    * Scalars only: the ADBC wire the reference speaks is flat here too,
+    * so a LIST or STRUCT column fails with an `IllegalArgumentException`
+    * naming the column before any table is created.
     */
   def ingestArrowLive(
       driverJar: java.nio.file.Path,
@@ -264,7 +240,12 @@ object DuckDbBridge {
     try {
       val root = reader.getVectorSchemaRoot
       val fields = root.getSchema.getFields.asScala.toSeq
-      val sparkTypes = fields.map(f => sparkTypeOfArrow(f.getType))
+      val sparkTypes = fields.map { f =>
+        val t = ArrowInterchange.toSparkField(f).dataType
+        require(!t.isInstanceOf[ArrayType] && !t.isInstanceOf[StructType],
+          s"live ingest: column '${f.getName}' is ${t.simpleString}; only scalar columns are supported")
+        t
+      }
       val colsDdl = fields.zip(sparkTypes)
         .map { case (f, t) => s"${quoteIdent(f.getName)} ${duckType(t)}" }
         .mkString(", ")
@@ -333,7 +314,7 @@ object DuckDbBridge {
             }
             rows += org.apache.spark.sql.Row.fromSeq(vals)
           }
-          graft.proto.ArrowInterchange.toIpcStream(rows.iterator, outSchema)
+          ArrowInterchange.toIpcStream(rows.iterator, outSchema)
         } finally qst.close()
       }
     } finally {

@@ -2,11 +2,8 @@ package graft.sources
 
 import java.util
 
-import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.VectorSchemaRoot
-import org.apache.arrow.vector.ipc.ArrowStreamWriter
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
@@ -17,6 +14,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+
+import graft.proto.ArrowInterchange.IpcStreamWriter
 
 /** Storage-partitioned Arrow IPC source: a `key=value/` directory layout
   * whose scan REPORTS its clustering to Catalyst, so an equi-join of two
@@ -167,8 +166,7 @@ object PartitionedArrow {
       dir: String, partitionCol: String): Seq[(String, Seq[String])] = {
     require(partitionCol != null, "option 'partitionCol' is required")
     val p = new Path(dir)
-    val fs = FileSystem.get(
-      p.toUri, SparkSession.active.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(ArrowIpcSource.sessionConf().value)
     if (!fs.exists(p)) return Seq.empty
     fs.listStatus(p)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partitionCol="))
@@ -219,11 +217,8 @@ object PartitionedArrow {
       s"null $keyCol values cannot be laid out into $keyCol=value directories")
     val conf = ArrowIpcSource.sessionConf()
     df.repartition(col(keyCol)).queryExecution.toRdd.foreachPartition { rows =>
-      // Arrow's Schema is not Serializable — rebuild it task-side from the
-      // (serializable) StructType
-      val arrowSchema = graft.proto.ArrowInterchange.toArrowSchema(schema)
       val taskId = org.apache.spark.TaskContext.get().taskAttemptId()
-      val open = scala.collection.mutable.Map.empty[String, PartitionedArrowFileWriter]
+      val open = scala.collection.mutable.Map.empty[String, (FSDataOutputStream, IpcStreamWriter)]
       try {
         rows.foreach { row =>
           val keyStr = encodeKey(keyDt match {
@@ -234,69 +229,14 @@ object PartitionedArrow {
             case other =>
               throw new IllegalArgumentException(s"unsupported partition key type $other")
           })
-          open.getOrElseUpdate(keyStr, new PartitionedArrowFileWriter(
-            new Path(s"$dir/$keyCol=$keyStr/part-$taskId.arrow"),
-            schema, arrowSchema, conf)).write(row)
+          open.getOrElseUpdate(keyStr, {
+            val path = new Path(s"$dir/$keyCol=$keyStr/part-$taskId.arrow")
+            val out = path.getFileSystem(conf.value).create(path, true)
+            (out, new IpcStreamWriter(schema, out))
+          })._2.write(row)
         }
-        open.values.foreach(_.finish())
-      } finally open.values.foreach(_.close())
-    }
-  }
-}
-
-/** One task's stream into one partition-value file (write-side twin of
-  * [[ArrowIpcPartitionReader]], sharing the Catalyst→Arrow setters).
-  */
-private class PartitionedArrowFileWriter(
-    path: Path,
-    schema: StructType,
-    arrowSchema: org.apache.arrow.vector.types.pojo.Schema,
-    conf: SerializableConfiguration,
-    batchSize: Int = 4096) {
-  private val allocator = new RootAllocator()
-  private val root = VectorSchemaRoot.create(arrowSchema, allocator)
-  private val out = {
-    val fs = path.getFileSystem(conf.value)
-    fs.create(path, true)
-  }
-  private val writer = new ArrowStreamWriter(root, null, out)
-  private var started = false
-  private var rowInBatch = 0
-  private var closed = false
-
-  def write(row: InternalRow): Unit = {
-    if (!started) { writer.start(); root.allocateNew(); started = true }
-    var j = 0
-    while (j < schema.fields.length) {
-      val vec = root.getVector(j)
-      if (row.isNullAt(j)) vec.setNull(rowInBatch)
-      else ArrowIpcSource.setFromCatalyst(vec, rowInBatch, schema.fields(j).dataType, row, j)
-      j += 1
-    }
-    rowInBatch += 1
-    if (rowInBatch == batchSize) flush()
-  }
-
-  private def flush(): Unit = if (rowInBatch > 0) {
-    root.setRowCount(rowInBatch)
-    writer.writeBatch()
-    root.allocateNew()
-    rowInBatch = 0
-  }
-
-  def finish(): Unit = {
-    if (!started) writer.start()
-    flush()
-    writer.end()
-  }
-
-  def close(): Unit = if (!closed) {
-    closed = true
-    try writer.close() finally {
-      try out.close() finally {
-        root.close()
-        allocator.close()
-      }
+        open.values.foreach(_._2.finish())
+      } finally open.values.foreach { case (out, w) => try w.close() finally out.close() }
     }
   }
 }

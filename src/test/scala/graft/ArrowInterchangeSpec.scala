@@ -1,5 +1,11 @@
 package graft
 
+import java.security.MessageDigest
+import java.time.{Instant, LocalDate, LocalDateTime}
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+
 import graft.proto.ArrowInterchange
 
 /** Arrow IPC round-trip (≈ the reference's Arrow-batches-out contract,
@@ -104,5 +110,54 @@ class ArrowInterchangeSpec extends SparkSpec {
     val (_, rows) = ArrowInterchange.fromIpcStream(ArrowInterchange.queryArrow(df))
     assert(rows(0)(1) == "a" && rows(1)(1) == null)
     assert(rows(1)(2) == null && rows(0)(2) != null)
+  }
+
+  test("toIpcStream bytes of the all-types fixture are pinned (SHA-256)") {
+    val item = StructType(Seq(StructField("a", LongType), StructField("b", StringType)))
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("i", IntegerType),
+      StructField("sh", ShortType), StructField("d", DoubleType),
+      StructField("f", FloatType), StructField("s", StringType),
+      StructField("flag", BooleanType), StructField("bin", BinaryType),
+      StructField("ts", TimestampType), StructField("ntz", TimestampNTZType),
+      StructField("day", DateType), StructField("amt", DecimalType(12, 3)),
+      StructField("items", ArrayType(item)),
+      StructField("meta", StructType(Seq(
+        StructField("x", IntegerType), StructField("tags", ArrayType(StringType)))))))
+    def ts(s: String) = java.sql.Timestamp.from(Instant.parse(s))
+    def day(s: String) = java.sql.Date.valueOf(LocalDate.parse(s))
+    def dec(s: String) = new java.math.BigDecimal(s)
+    val rows = Seq(
+      Row(1L, 7, 3.toShort, 1.5, 0.25f, "plain", true, Array[Byte](1, 2, 3),
+        ts("1969-12-31T23:59:59.123456Z"), LocalDateTime.parse("1969-07-20T20:17:40.000001"),
+        day("1960-02-29"), dec("-12.345"),
+        Seq(Row(1L, "x"), null, Row(null, "y"), Row(2L, null)),
+        Row(5, Seq("a", null, "b"))),
+      Row(2L, null, null, null, null, null, null, null, null, null, null, null, null, null),
+      Row(3L, -1, (-32768).toShort, -0.0, Float.MaxValue, "astral \ud834\udd1e \ud83d\ude42 héllo",
+        false, Array.emptyByteArray, ts("1910-02-03T04:05:06.000789Z"),
+        LocalDateTime.parse("2024-03-01T12:34:56.789012"), day("2026-02-03"),
+        dec("999999999.999"), Seq.empty, Row(null, null)),
+      Row(4L, Int.MaxValue, 1.toShort, Double.MinPositiveValue, -1.0f, "", true,
+        Array[Byte](0), ts("2026-01-02T03:04:05.678901Z"), null, null, dec("0.000"),
+        Seq(null), null),
+      Row(5L, 0, 0.toShort, 1e300, 3.5f, "fifth", null, Array[Byte](-1, 127),
+        ts("1901-01-01T00:00:00Z"), LocalDateTime.parse("1901-01-01T00:00:00"),
+        day("1969-12-31"), null, Seq(Row(3L, "z")), Row(9, Seq.empty)),
+      Row(6L, 6, 6.toShort, 6.0, 6.0f, "six", false, null, null,
+        LocalDateTime.parse("2100-12-31T23:59:59.999999"), day("2100-12-31"),
+        dec("0.001"), null, Row(-7, null)),
+      Row(7L, 7, 7.toShort, -7.25, -7.5f, "seven 𝄞", true, Array[Byte](7),
+        ts("1970-01-01T00:00:00.000001Z"), LocalDateTime.parse("1970-01-01T00:00:00"),
+        day("1970-01-01"), dec("7.5"), Seq(Row(null, null), Row(7L, "7")), Row(null, Seq(null))),
+      Row(8L, 8, 8.toShort, 8.0, 8.0f, "eight", false, Array[Byte](8, 8),
+        ts("1969-01-01T00:00:00.5Z"), LocalDateTime.parse("1969-01-01T00:00:00.5"),
+        day("1969-01-01"), dec("-0.008"), Seq(Row(8L, "eight")), Row(8, Seq("8"))),
+      Row(9L, 9, 9.toShort, 9.0, 9.0f, "nine", true, Array[Byte](9), null, null,
+        day("1999-09-09"), dec("9.999"), Seq(null, null), Row(9, null)))
+    val bytes = ArrowInterchange.toIpcStream(rows.iterator, schema, batchSize = 4)
+    val sha = MessageDigest.getInstance("SHA-256").digest(bytes).map("%02x".format(_)).mkString
+    val got = s"${bytes.length} bytes, sha256 $sha"
+    assert(got == "6096 bytes, sha256 e2fe1512d6ffdcfe5dd796ae6382ae7b856d1c5db29b486373832f725e880c23")
   }
 }

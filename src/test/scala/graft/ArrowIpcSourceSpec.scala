@@ -2,17 +2,27 @@ package graft
 
 import java.util.UUID
 
-import graft.proto.ArrowInterchange
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+import graft.sources.PartitionedArrow
 
 /** DSv2 Arrow-IPC source: schema from the stream, one partition per file,
-  * column pruning, full-fidelity values (≈ SURVEY §2 A2-A6).
+  * column pruning, full-fidelity values (≈ SURVEY §2 A2-A6). Fixtures are
+  * written through the same connector's DSv2 sink.
   */
 class ArrowIpcSourceSpec extends SparkSpec {
+
+  private def writeIpcFiles(df: DataFrame, dir: String): Unit =
+    df.write.format("graft.sources.ArrowIpcSource").mode("append").save(dir)
 
   private def writeFixture(): (String, org.apache.spark.sql.DataFrame) = {
     val df = Tables(spark, sfDir, "supplier")
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ipc-test-${UUID.randomUUID().toString.take(8)}"
-    ArrowInterchange.writeIpcDir(df.repartition(3), dir)
+    writeIpcFiles(df.repartition(3), dir)
     (dir, df)
   }
 
@@ -63,11 +73,11 @@ class ArrowIpcSourceSpec extends SparkSpec {
     import spark.implicits._
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ipc-perm-${UUID.randomUUID().toString.take(8)}"
     // two single-partition writes with opposite column orders
-    ArrowInterchange.writeIpcDir(
+    writeIpcFiles(
       Seq((1L, "a")).toDF("id", "name").coalesce(1), dir)
     val second = s"$dir/zz-permuted.arrow" // sorts after the first file
     val tmp2 = s"$dir-tmp"
-    ArrowInterchange.writeIpcDir(
+    writeIpcFiles(
       Seq(("b", 2L)).toDF("name", "id").coalesce(1), tmp2)
     val f2 = new java.io.File(tmp2).listFiles().filter(_.getName.endsWith(".arrow")).head
     java.nio.file.Files.move(f2.toPath, java.nio.file.Paths.get(second))
@@ -80,10 +90,10 @@ class ArrowIpcSourceSpec extends SparkSpec {
   test("a file missing a required column fails fast, not silently") {
     import spark.implicits._
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ipc-miss-${UUID.randomUUID().toString.take(8)}"
-    ArrowInterchange.writeIpcDir(
+    writeIpcFiles(
       Seq((1L, "a")).toDF("id", "name").coalesce(1), dir)
     val tmp2 = s"$dir-tmp"
-    ArrowInterchange.writeIpcDir(Seq(Tuple1(2L)).toDF("id").coalesce(1), tmp2)
+    writeIpcFiles(Seq(Tuple1(2L)).toDF("id").coalesce(1), tmp2)
     val f2 = new java.io.File(tmp2).listFiles().filter(_.getName.endsWith(".arrow")).head
     java.nio.file.Files.move(f2.toPath, java.nio.file.Paths.get(s"$dir/zz-short.arrow"))
     val e = intercept[org.apache.spark.SparkException] {
@@ -104,7 +114,7 @@ class ArrowIpcSourceSpec extends SparkSpec {
         |  (2L, CAST(-0.05 AS DECIMAL(10,2)), array(named_struct('a', 3L, 'b', 'z'))),
         |  (3L, CAST(NULL AS DECIMAL(10,2)), CAST(NULL AS ARRAY<STRUCT<a: BIGINT, b: STRING>>))
         |AS t(id, amount, items)""".stripMargin)
-    ArrowInterchange.writeIpcDir(df.coalesce(1), dir)
+    writeIpcFiles(df.coalesce(1), dir)
     val back = spark.read.format("graft.sources.ArrowIpcSource").load(dir)
     assert(back.schema.map(f => (f.name, f.dataType)) ==
       df.schema.map(f => (f.name, f.dataType)))
@@ -121,7 +131,7 @@ class ArrowIpcSourceSpec extends SparkSpec {
         |  (1L, TIMESTAMP_NTZ '2024-03-01 12:34:56.789012'),
         |  (2L, CAST(NULL AS TIMESTAMP_NTZ))
         |AS t(id, dt)""".stripMargin)
-    ArrowInterchange.writeIpcDir(df.coalesce(1), dir)
+    writeIpcFiles(df.coalesce(1), dir)
     val back = spark.read.format("graft.sources.ArrowIpcSource").load(dir)
     assert(back.schema("dt").dataType ==
       org.apache.spark.sql.types.TimestampNTZType)
@@ -138,10 +148,44 @@ class ArrowIpcSourceSpec extends SparkSpec {
       (2L, None, None)).toDF("id", "s", "ts_s")
       .selectExpr("id", "s", "CAST(ts_s AS TIMESTAMP) AS ts")
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ipc-test-${UUID.randomUUID().toString.take(8)}"
-    ArrowInterchange.writeIpcDir(df, dir)
+    writeIpcFiles(df, dir)
     val back = spark.read.format("graft.sources.ArrowIpcSource").load(dir)
       .orderBy("id").collect()
     assert(back(0).getTimestamp(2).toString.startsWith("2024-05-05 05:05:05.123456"))
     assert(back(1).isNullAt(1) && back(1).isNullAt(2))
   }
+
+  test("driver listings use the session's Hadoop conf, as the tasks do") {
+    val (dir, df) = writeFixture()
+    val laidOut = s"$dir-by-nation"
+    PartitionedArrow.write(df, laidOut, "s_nationkey")
+    val session = spark.newSession()
+    session.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    session.conf.set("fs.file.impl.disable.cache", "true")
+    SparkSession.setActiveSession(session)
+    try {
+      val before = CountingLocalFs.listings.get
+      val flat = session.read.format("graft.sources.ArrowIpcSource").load(dir)
+      assert(flat.count() == df.count())
+      val afterFlat = CountingLocalFs.listings.get
+      assert(afterFlat > before, "ArrowIpcSource listed through another conf")
+      val keyed = session.read.format("graft.sources.PartitionedArrowSource")
+        .option("partitionCol", "s_nationkey").load(laidOut)
+      assert(keyed.where(col("s_nationkey") >= 0).count() == df.count())
+      assert(CountingLocalFs.listings.get > afterFlat,
+        "PartitionedArrowSource listed through another conf")
+    } finally SparkSession.setActiveSession(spark)
+  }
+}
+
+/** A local file system that counts its directory listings. */
+class CountingLocalFs extends LocalFileSystem {
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingLocalFs.listings.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object CountingLocalFs {
+  val listings = new AtomicInteger
 }

@@ -133,6 +133,17 @@ class DuckDbBridgeSpec extends SparkSpec {
       (2L, "1910-02-03 04:05:06.000789"),
       (3L, "2026-01-02 03:04:05.678901")))
   }
+
+  test("LIVE Arrow ingest: a nested column fails with a clear error") {
+    val jar = findDuckDbJar()
+    assume(jar.isDefined, "no duckdb_jdbc jar in the offline cache — seam stays file-based")
+    val df = Seq((1L, Array(1L, 2L))).toDF("id", "xs")
+    val ipc = graft.proto.ArrowInterchange.toIpcStream(df.collect().iterator, df.schema)
+    val e = intercept[IllegalArgumentException] {
+      DuckDbBridge.ingestArrowLive(jar.get, ipc, "nested", Seq("SELECT 1"))
+    }
+    assert(e.getMessage.contains("'xs'") && e.getMessage.contains("scalar"), e.getMessage)
+  }
 }
 
 object DuckDbBridgeSpec {

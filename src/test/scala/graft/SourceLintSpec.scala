@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level pins for the one-path design: ops reach Graft kernels
   * through `Graft.kernel`/`Graft.install`, never a per-call registry probe
   * with a second code path; `Graft.session` is the one session builder;
-  * `sources.Parquet.read` is the one parquet read; and no catch swallows
-  * a fatal error.
+  * `sources.Parquet.read` is the one parquet read; `proto.ArrowInterchange`
+  * is the one Arrow codec; and no catch swallows a fatal error.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -55,6 +55,23 @@ class SourceLintSpec extends AnyFunSuite {
   test("no catch of Throwable in src/main") {
     val pattern = ("""case\s+\w+\s*:\s*""" + "Throwable").r
     val found = matches(Seq("src/main"), pattern.findFirstIn(_).nonEmpty)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no hand-written Arrow value setter in src/main") {
+    val found = hits(Seq("src/main"), "setSafe" + "(")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("Spark's ArrowWriter is created only in proto/ArrowInterchange.scala") {
+    val codec = "src/main/scala/graft/proto/ArrowInterchange.scala"
+    val found = outside(codec)(hits(Seq("src/main"), "ArrowWriter" + ".create("))
+    assert(found.isEmpty, found.mkString("\n"))
+    assert(hits(Seq(codec), "ArrowWriter" + ".create(").nonEmpty)
+  }
+
+  test("no driver-collecting Arrow directory writer in src") {
+    val found = hits(Seq("src/main", "src/test"), "writeIpc" + "Dir")
     assert(found.isEmpty, found.mkString("\n"))
   }
 }
